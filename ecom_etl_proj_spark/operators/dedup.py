@@ -1228,9 +1228,18 @@ def _cc_local(
     (rather than a distributed anti-join union) keeps the result a
     pure local table — CC consumers re-execute the labels frame per
     action, and a measured distributed-singles variant paid its
-    exchange once per consumer (A/B in OPTIMIZATION_r16.md)."""
+    exchange once per consumer (A/B in OPTIMIZATION_r16.md).
+
+    Rows with a NULL doc id are dropped before the collect, as the
+    distributed paths' SQL comparisons drop them: a (x, NULL) pair is
+    no edge and a (NULL, NULL) pair no singleton."""
     cap = max_edges + max_singles + 1
-    rows = base.distinct().limit(cap).collect()
+    rows = (
+        base.filter(F.col("doc_a").isNotNull() & F.col("doc_b").isNotNull())
+        .distinct()
+        .limit(cap)
+        .collect()
+    )
     if len(rows) >= cap:
         return None
     edge_rows = [(r[0], r[1]) for r in rows if r[0] != r[1]]

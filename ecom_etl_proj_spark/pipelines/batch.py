@@ -24,9 +24,9 @@ Scale notes (100 TB):
 - The dedup/impute/map operators are the composable ones from
   ``operators/cleaning.py`` — one shuffle each, AQE handles skew.
 - Validation is count-only (like the reference) plus NOT NULL checks on
-  key columns — both FUSED into one Spark job per layer via the
-  constraint_audit literal-width-union shape (a per-table job each
-  through r10), over column-pruned scans of the written tables.
+  key columns — both FUSED into one action per layer: one groupBy over
+  the union of per-table row streams (a per-table job each through
+  r10), over column-pruned scans of the written tables.
 """
 
 from __future__ import annotations
@@ -63,36 +63,48 @@ def _write(df: DataFrame, path: str, partition_cols: list[str] | None = None) ->
     w.parquet(path)
 
 
-def fused_table_counts(frames: dict[str, DataFrame]) -> dict[str, int]:
-    """Row counts for a whole layer in ONE Spark ACTION: a literal-
-    width union of per-table count aggregates (the constraint_audit
-    shape, operators/cleaning.py). Through r10 this was one
-    ``.count()`` action per table — one scheduler round trip each, and
-    for derived frames a full lineage recompute; at warehouse scale
-    one fused job suffices (tests/test_pipeline.py asserts the single
-    job)."""
+def _union_tally(streams: dict[str, DataFrame], agg) -> dict[str, int]:
+    """One aggregate per table over the UNION of per-table row streams
+    (column ``t`` = table name): a whole layer is one scan stage and one
+    groupBy shuffle — with AQE on, one map-stage job plus one result
+    job, whatever the table count. A table with zero rows reports 0."""
     from functools import reduce
 
-    parts = [
-        df.agg(F.count("*").alias("n")).select(F.lit(name).alias("t"), "n")
-        for name, df in frames.items()
-    ]
-    return {
-        r["t"]: r["n"] for r in reduce(DataFrame.unionByName, parts).collect()
-    }
+    rows = (
+        reduce(DataFrame.unionByName, streams.values())
+        .groupBy("t")
+        .agg(agg.alias("x"))
+        .collect()
+    )
+    out = dict.fromkeys(streams, 0)
+    out.update({r["t"]: r["x"] for r in rows})
+    return out
+
+
+def fused_table_counts(frames: dict[str, DataFrame]) -> dict[str, int]:
+    """Row counts for a whole layer in ONE Spark action (see
+    ``_union_tally``; tests/test_pipeline.py asserts the job budget)."""
+    return _union_tally(
+        {name: df.select(F.lit(name).alias("t")) for name, df in frames.items()},
+        F.count("*"),
+    )
 
 
 def _fused_counts(
-    spark: SparkSession, out_dir: str, layer: str, names
+    spark: SparkSession, out_dir: str, layer: str, frames: dict[str, DataFrame]
 ) -> dict[str, int]:
     """Post-load counts over the tables as WRITTEN (the read-back also
     validates what actually landed; row-group metadata keeps the scan
-    cheap). Plan building reads parquet footers — the one fused job is
-    the counting action itself."""
+    cheap). Each table is read back with the schema of the frame that
+    was just written, so plan building infers no schema (a footer-
+    reading job per table) — the one fused action is the counting
+    itself."""
     return fused_table_counts(
         {
-            name: spark.read.parquet(os.path.join(out_dir, layer, name))
-            for name in names
+            name: spark.read.schema(df.schema).parquet(
+                os.path.join(out_dir, layer, name)
+            )
+            for name, df in frames.items()
         }
     )
 
@@ -106,10 +118,10 @@ ODS_TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lin
 
 def run_ods(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
     """Typed raw tables, truncate-reload (overwrite) idempotent."""
-    for name in ODS_TABLES:
-        df = catalog.load_table(spark, sf_dir, name)
+    ods = {name: catalog.load_table(spark, sf_dir, name) for name in ODS_TABLES}
+    for name, df in ods.items():
         _write(df, os.path.join(out_dir, "ods", name))
-    return _fused_counts(spark, out_dir, "ods", ODS_TABLES)
+    return _fused_counts(spark, out_dir, "ods", ods)
 
 
 # ---------------------------------------------------------------------------
@@ -289,44 +301,35 @@ def run_dwh(spark: SparkSession, out_dir: str, snapshot_date: str) -> dict[str, 
         ("dim_supplier", dim_supplier, None),
         ("fact_sales", fact_sales, ["ship_month"]),
     ]
+    written = {}
     for name, df, parts in loads:
-        stamped = cleaning.audit_columns(df, snapshot_date)
-        _write(stamped, os.path.join(out_dir, "dwh", name), parts)
-    return _fused_counts(spark, out_dir, "dwh", [n for n, _, _ in loads])
+        written[name] = cleaning.audit_columns(df, snapshot_date)
+        _write(written[name], os.path.join(out_dir, "dwh", name), parts)
+    return _fused_counts(spark, out_dir, "dwh", written)
 
 
 def fused_not_null_counts(
     frames: dict[str, DataFrame], cols_of: dict[str, list[str]]
 ) -> dict[str, int]:
     """NOT NULL violation counts for many tables in ONE Spark action
-    (the constraint_audit literal-width-union shape): each table
-    contributes a single conditional-sum aggregate over a scan
-    column-pruned to its key columns — replacing one filter+count job
-    per table."""
+    (see ``_union_tally``): each table contributes a violation flag per
+    row over a scan column-pruned to its key columns — replacing one
+    filter+count job per table."""
     from functools import reduce
+    from operator import or_
 
-    parts = []
-    for table, cols in cols_of.items():
-        null_any = None
-        for c in cols:
-            cond = F.col(c).isNull()
-            null_any = cond if null_any is None else (null_any | cond)
-        parts.append(
-            frames[table]
-            .agg(
-                F.sum(F.when(null_any, 1).otherwise(0))
-                .cast("bigint")
-                .alias("viol")
-            )
-            .select(
+    return _union_tally(
+        {
+            table: frames[table].select(
                 F.lit(table).alias("t"),
-                F.coalesce("viol", F.lit(0)).alias("viol"),
+                reduce(or_, [F.col(c).isNull() for c in cols])
+                .cast("long")
+                .alias("viol"),
             )
-        )
-    return {
-        r["t"]: r["viol"]
-        for r in reduce(DataFrame.unionByName, parts).collect()
-    }
+            for table, cols in cols_of.items()
+        },
+        F.sum("viol"),
+    )
 
 
 def validate_dwh(spark: SparkSession, out_dir: str) -> dict[str, int]:

@@ -33,12 +33,16 @@ for the single-writer-per-sink topology Structured Streaming
 guarantees (one driver runs the foreachBatch of a given query).
 
 Scale notes (100 TB/day): every op list is built from PER-BATCH
-AGGREGATES (groupBy over the micro-batch — partial aggregation
-map-side), never raw events, so the driver handles |distinct keys in
-batch| rows per family — the same bounded-key contract the reference's
-Redis already imposes on the serving tier.  The heavy state (full
-per-product history) lives in the streaming aggregation / state store;
-this layer only ships deltas.
+AGGREGATES, never raw events. One GROUPING SETS aggregate over the
+micro-batch (partial aggregation map-side) yields every counter family
+and the totals; a single-level salted top-N yields the recent-N
+candidates, at most families x 32 x recent_n rows by construction. In
+driver mode ONE collect of their union answers the epoch (isEmpty plus
+that collect: at most 4 Spark jobs), so the driver handles |distinct
+keys in batch| + the recent bound — the same bounded-key contract the
+reference's Redis already imposes on the serving tier.  The heavy
+state (full per-product history) lives in the streaming aggregation /
+state store; this layer only ships deltas.
 """
 
 from __future__ import annotations
@@ -48,7 +52,7 @@ import os
 import threading
 from decimal import Decimal
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 REDIS_URL_ENV = "SPARK_GRAFT_REDIS_URL"
@@ -430,23 +434,105 @@ def _prepared(batch_df: DataFrame) -> DataFrame:
     )
 
 
+# GROUPING SETS over these keys feed every counter family at once;
+# grouping_id() sets one bit per key a set rolls up (first key = most
+# significant bit), which ``_GID`` spells out per set.
+_KEYS = ("fam", "minute", "product_id", "view_user")
+_SETS = {
+    "minutely": ("fam", "minute"),
+    "product": ("fam", "product_id"),
+    "user": ("fam", "view_user"),
+    "family": ("fam",),
+}
+_GID = {"minutely": 0b0011, "product": 0b0101, "user": 0b0110, "family": 0b0111}
+_RECENT = -1  # the ``g`` tag of recent-N rows in the driver's collect
+_SALTS = 32  # recent-N salt buckets per family
+# families whose minutely DECIMAL value sum is served too
+VALUE_KEY = {"orders": "revenue:minutely", "cart_adds": "cart:value:minutely"}
+
+
+def _grouped(e: DataFrame) -> DataFrame:
+    """Every per-batch aggregate of the op stream in ONE pass: GROUPING
+    SETS (fam, minute) / (fam, product_id) / (fam, view_user) / (fam)
+    over the prepared batch with count, DECIMAL(18,6) value sum and
+    max(ts); ``g`` is the row's grouping_id(). ``view_user`` is the user
+    id on view events and NULL elsewhere, so the user set adds one row
+    per viewing user plus one per other family. Sets are told apart by
+    ``g`` alone, so a NULL grouping key (a view without user_id, props
+    without $.k) stays its own group exactly like a plain groupBy."""
+    return (
+        e.withColumn(
+            "view_user", F.when(F.col("fam") == "views", F.col("user_id"))
+        )
+        .groupingSets([list(cols) for cols in _SETS.values()], *_KEYS)
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("value").cast("decimal(18,6)")).alias("v"),
+            F.max("ts").alias("mx"),
+            F.grouping_id().alias("g"),
+        )
+    )
+
+
+def consumer_recent_rows(e: DataFrame, recent_n: int = 100) -> DataFrame:
+    """Per-family recent-N candidates: a single-level salted top-N,
+    ``row_number() <= recent_n`` per (fam, event_id mod 32), so the
+    frame holds at most families x 32 x recent_n rows by construction
+    and no family funnels through one task. Every family's newest
+    recent_n events survive (each is in its salt bucket's top-N); the
+    per-family sort and trim ((ts, event_id) descending) is left to the
+    consumer of these bounded rows — the driver op builder or the
+    executor push."""
+    order = [F.col("ts").desc(), F.col("event_id").desc()]
+    w = Window.partitionBy("fam", F.pmod("event_id", F.lit(_SALTS))).orderBy(
+        *order
+    )
+    return (
+        e.select("fam", "event_id", "ts", "user_id", "value")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= recent_n)
+        .drop("rn")
+    )
+
+
+def _scalar_ops(fam_rows: list) -> list[Op]:
+    """The scalar tail from the (fam) set's rows: family totals and
+    revenue (hincr), then last_updated / last_activity — the batch's
+    max event ts (event time, not wall clock, so replays and backfills
+    are deterministic; consumer.py:360 uses now())."""
+    if not fam_rows:
+        return []
+    fam_rows = sorted(fam_rows, key=lambda r: r["fam"])
+    totals: dict[str, object] = {f"total_{r['fam']}": r["n"] for r in fam_rows}
+    for r in fam_rows:
+        if r["fam"] == "orders":
+            totals["total_revenue"] = r["v"] or Decimal(0)
+    last = max(r["mx"] for r in fam_rows).isoformat()
+    return [
+        ("hincr", "metrics:totals", totals),
+        ("hset", "metrics:totals", {"last_updated": last}),
+        ("set", "metrics:last_activity", last),
+    ]
+
+
 def consumer_metric_ops(batch_df: DataFrame, recent_n: int = 100) -> list[Op]:
     """Compute one micro-batch's serving-store op list — the
     vectorized twin of the consumer's per-message handlers
-    (consumer.py:195-360). Every op amount comes from a per-batch
-    AGGREGATE (count / DECIMAL sum), so applying the batches in any
-    epoch order yields exactly the batch queries' totals.
+    (consumer.py:195-360) — from ONE collect: the ``_grouped`` GROUPING
+    SETS aggregate unioned with the bounded ``consumer_recent_rows``
+    (tagged ``g = -1``). Every amount is a per-batch aggregate (count /
+    DECIMAL sum), so applying the batches in any epoch order yields
+    exactly the batch queries' totals. The op list is deterministic:
+    hincr ops by key then field, recent lists by family, scalar tail.
 
-    Ops emitted per batch (reference key for each):
+    Keys (reference line for each):
     - ``<fam>:minutely`` count hashes + ``revenue:minutely`` /
       ``cart:value:minutely`` value hashes (consumer.py:202,241,278,309)
     - ``product:<fam>`` per-product counters (consumer.py:206,246,283,320)
     - ``user:views`` per-user view counts (consumer.py:214)
-    - ``metrics:totals`` family totals + revenue (consumer.py:348-357)
     - ``recent:<fam>`` newest-first JSON lists (consumer.py:219-340)
-    - ``metrics:last_activity`` — max event ts in the batch (event
-      time, not wall clock, so replays and backfills are
-      deterministic; consumer.py:360 uses now()).
+    - ``metrics:totals`` family totals + revenue, ``last_updated`` and
+      ``metrics:last_activity`` (consumer.py:348-360)
 
     Timestamps are EVENT time (the stream's ts column): the reference
     buckets by consumer wall clock, which double-counts on replay and
@@ -454,195 +540,121 @@ def consumer_metric_ops(batch_df: DataFrame, recent_n: int = 100) -> list[Op]:
     semantics every batch twin (events_minutely) already uses.
     """
     e = _prepared(batch_df)
-
-    dec_val = F.col("value").cast("decimal(18,6)")
-    minutely = e.groupBy("fam", "minute").agg(
-        F.count("*").alias("n"), F.sum(dec_val).alias("v")
-    ).collect()
-    per_product = e.groupBy("fam", "product_id").agg(
-        F.count("*").alias("n")
-    ).collect()
-    user_views = (
-        e.filter(F.col("fam") == "views")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"))
+    rows = (
+        _grouped(e)
+        .unionByName(
+            consumer_recent_rows(e, recent_n).withColumn("g", F.lit(_RECENT)),
+            allowMissingColumns=True,
+        )
         .collect()
     )
-    # per-FAMILY recent-N (a global top-N could starve a quiet family):
-    # the same salted two-level top-N shape as the batch twin
-    # recent_events_by_family — local top-N per (fam, salt) in
-    # parallel, final re-rank over the bounded survivors.
-    from pyspark.sql import Window
-
-    order = [F.col("ts").desc(), F.col("event_id").desc()]
-    w_local = Window.partitionBy(
-        "fam", F.pmod("event_id", F.lit(32))
-    ).orderBy(*order)
-    w_final = Window.partitionBy("fam").orderBy(*order)
-    recent = (
-        e.select("fam", "event_id", "ts", "user_id", "value")
-        .withColumn("rn", F.row_number().over(w_local))
-        .filter(F.col("rn") <= recent_n)
-        .withColumn("rn", F.row_number().over(w_final))
-        .filter(F.col("rn") <= recent_n)
-        .orderBy("fam", *order)
-        .collect()
-    )
-
-    ops: list[Op] = []
-    totals: dict[str, object] = {}
-    max_ts = None
-    for r in minutely:
-        fam, v = r["fam"], r["v"] or Decimal(0)
-        ops.append(("hincr", MINUTELY_KEY[fam], {r["minute"]: r["n"]}))
-        if fam == "orders":
-            ops.append(("hincr", "revenue:minutely", {r["minute"]: v}))
-            totals["total_revenue"] = totals.get("total_revenue", Decimal(0)) + v
-        elif fam == "cart_adds":
-            ops.append(("hincr", "cart:value:minutely", {r["minute"]: v}))
-        totals[f"total_{fam}"] = totals.get(f"total_{fam}", 0) + r["n"]
-    for r in per_product:
-        if r["product_id"] is not None:
-            ops.append(
-                ("hincr", f"product:{r['fam']}", {str(r["product_id"]): r["n"]})
-            )
-    for r in user_views:
-        ops.append(("hincr", "user:views", {str(r["user_id"]): r["n"]}))
-    if totals:
-        ops.append(("hincr", "metrics:totals", totals))
-    by_fam: dict[str, list[str]] = {}
-    for r in recent:
-        max_ts = max(max_ts, r["ts"]) if max_ts else r["ts"]
-        item = json.dumps(
-            {
-                "event_id": r["event_id"],
-                "timestamp": r["ts"].isoformat(),
-                "user_id": r["user_id"],
-                "value": r["value"],
-            }
-        )
-        by_fam.setdefault(r["fam"], []).append(item)
-    for fam, items in by_fam.items():
-        # items are newest-first; lpush_trim re-reverses so the stored
-        # list stays newest-first like the consumer's LPUSH stream
-        ops.append(
-            ("lpush_trim", f"recent:{fam}", list(reversed(items[:recent_n])),
-             recent_n)
-        )
-    if max_ts is not None:
-        ops.append(
-            ("hset", "metrics:totals", {"last_updated": max_ts.isoformat()})
-        )
-        ops.append(("set", "metrics:last_activity", max_ts.isoformat()))
-    return ops
+    hincr: dict[str, dict] = {}
+    fam_rows, recent = [], {}
+    for r in rows:
+        g, fam = r["g"], r["fam"]
+        if g == _RECENT:
+            recent.setdefault(fam, []).append(r)
+        elif g == _GID["family"]:
+            fam_rows.append(r)
+        elif g == _GID["minutely"]:
+            hincr.setdefault(MINUTELY_KEY[fam], {})[r["minute"]] = r["n"]
+            if fam in VALUE_KEY:
+                hincr.setdefault(VALUE_KEY[fam], {})[r["minute"]] = (
+                    r["v"] or Decimal(0)
+                )
+        elif g == _GID["product"]:
+            if r["product_id"] is not None:
+                hincr.setdefault(f"product:{fam}", {})[
+                    str(r["product_id"])
+                ] = r["n"]
+        elif fam == "views":  # the user set; other families roll up here
+            hincr.setdefault("user:views", {})[str(r["view_user"])] = r["n"]
+    ops: list[Op] = [
+        ("hincr", key, dict(sorted(hincr[key].items(), key=str)))
+        for key in sorted(hincr)
+    ]
+    for fam in sorted(recent):
+        newest = sorted(
+            recent[fam], key=lambda r: (r["ts"], r["event_id"]), reverse=True
+        )[:recent_n]
+        items = [
+            json.dumps({
+                "event_id": r["event_id"], "timestamp": r["ts"].isoformat(),
+                "user_id": r["user_id"], "value": r["value"],
+            })
+            for r in reversed(newest)
+        ]
+        # lpush_trim re-reverses, so the stored list stays newest-first
+        # like the consumer's LPUSH stream
+        ops.append(("lpush_trim", f"recent:{fam}", items, recent_n))
+    return ops + _scalar_ops(fam_rows)
 
 
 def consumer_counter_rows(e: DataFrame) -> DataFrame:
-    """The executor-push shape of every hash-increment family: ONE
-    uniform (key, field, amt_long, amt_dec) frame — minutely counts,
-    minutely revenue/cart value, per-product counters, per-user views
-    — all reduced to per-batch aggregates BEFORE the push, exactly the
-    rows the driver path would collect. hincr is commutative and the
-    groupBy keys are disjoint across partitions, so partition-parallel
-    application in any order lands the same totals."""
-    dec_val = F.col("value").cast("decimal(18,6)")
-    key_min = F.col("fam")
-    for fam, key in MINUTELY_KEY.items():
-        key_min = F.when(F.col("fam") == fam, key).otherwise(key_min)
-    minutely = e.groupBy("fam", "minute").agg(
-        F.count("*").alias("n"), F.sum(dec_val).alias("v")
+    """The executor-push shape of every hash-increment family: the
+    ``_grouped`` aggregate projected to ONE uniform (key, field,
+    amt_long, amt_dec) frame — minutely counts and revenue/cart value,
+    per-product counters, per-user views — exactly the counters the
+    driver path builds from the same rows (a NULL user id is the field
+    ``"None"`` in both). hincr is commutative and (key, field) is
+    unique per batch, so partition-parallel application in any order
+    lands the same totals."""
+    g, fam = F.col("g"), F.col("fam")
+    minutely_key = F.lit(None)
+    for f, key in MINUTELY_KEY.items():
+        minutely_key = F.when(fam == f, key).otherwise(minutely_key)
+    value_key = F.lit(None)
+    for f, key in VALUE_KEY.items():
+        value_key = F.when(fam == f, key).otherwise(value_key)
+    field = (
+        F.when(g == _GID["minutely"], F.col("minute"))
+        .when(g == _GID["product"], F.col("product_id").cast("string"))
+        .otherwise(F.coalesce(F.col("view_user").cast("string"), F.lit("None")))
     )
-    counts = minutely.select(
-        key_min.alias("key"),
-        F.col("minute").alias("field"),
-        F.col("n").alias("amt_long"),
-        F.lit(None).cast("decimal(18,6)").alias("amt_dec"),
-    )
-    values = minutely.filter(
-        F.col("fam").isin("orders", "cart_adds")
-    ).select(
-        F.when(F.col("fam") == "orders", "revenue:minutely")
-        .otherwise("cart:value:minutely")
-        .alias("key"),
-        F.col("minute").alias("field"),
-        F.lit(None).cast("long").alias("amt_long"),
-        F.coalesce(F.col("v"), F.lit(0).cast("decimal(18,6)"))
-        .alias("amt_dec"),
-    )
-    products = (
-        e.filter(F.col("product_id").isNotNull())
-        .groupBy("fam", "product_id")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.concat(F.lit("product:"), F.col("fam")).alias("key"),
-            F.col("product_id").cast("string").alias("field"),
-            F.col("n").alias("amt_long"),
-            F.lit(None).cast("decimal(18,6)").alias("amt_dec"),
+    count_key = (
+        F.when(g == _GID["minutely"], minutely_key)
+        .when(
+            (g == _GID["product"]) & F.col("product_id").isNotNull(),
+            F.concat(F.lit("product:"), fam),
         )
+        .when((g == _GID["user"]) & (fam == "views"), F.lit("user:views"))
     )
-    users = (
-        e.filter(F.col("fam") == "views")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.lit("user:views").alias("key"),
-            F.col("user_id").cast("string").alias("field"),
-            F.col("n").alias("amt_long"),
-            F.lit(None).cast("decimal(18,6)").alias("amt_dec"),
+    no_long = F.lit(None).cast("long")
+    no_dec = F.lit(None).cast("decimal(28,6)")
+
+    def entry(key, amt_long, amt_dec):
+        return F.struct(
+            key.cast("string").alias("key"), field.alias("field"),
+            amt_long.alias("amt_long"), amt_dec.alias("amt_dec"),
         )
-    )
-    return counts.unionByName(values).unionByName(products).unionByName(users)
 
-
-def consumer_recent_rows(e: DataFrame, recent_n: int = 100) -> DataFrame:
-    """Per-family recent-N rows for the executor push: the same salted
-    two-level top-N as the driver path, BOUNDED at fams x recent_n
-    before any repartition."""
-    from pyspark.sql import Window
-
-    order = [F.col("ts").desc(), F.col("event_id").desc()]
-    w_local = Window.partitionBy(
-        "fam", F.pmod("event_id", F.lit(32))
-    ).orderBy(*order)
-    w_final = Window.partitionBy("fam").orderBy(*order)
     return (
-        e.select("fam", "event_id", "ts", "user_id", "value")
-        .withColumn("rn", F.row_number().over(w_local))
-        .filter(F.col("rn") <= recent_n)
-        .withColumn("rn", F.row_number().over(w_final))
-        .filter(F.col("rn") <= recent_n)
-        .drop("rn")
+        _grouped(e)
+        .select(
+            F.inline(
+                F.array(
+                    entry(count_key, F.col("n"), no_dec),
+                    entry(
+                        F.when(g == _GID["minutely"], value_key),
+                        no_long,
+                        F.coalesce(F.col("v"), F.lit(0)).cast("decimal(28,6)"),
+                    ),
+                )
+            )
+        )
+        .filter(F.col("key").isNotNull())
     )
 
 
 def consumer_scalar_ops(e: DataFrame) -> list[Op]:
-    """The order-sensitive scalar tail of the op stream — family
-    totals, revenue total, last_updated / last_activity — built from
-    ONE <=5-row aggregate collect. These stay driver-applied in both
-    sink modes: hset/set are last-writer-wins, so they need the single
-    deterministic writer, while everything partition-parallel is
-    commutative hincr."""
-    dec_val = F.col("value").cast("decimal(18,6)")
-    rows = e.groupBy("fam").agg(
-        F.count("*").alias("n"),
-        F.sum(dec_val).alias("v"),
-        F.max("ts").alias("mx"),
-    ).collect()
-    if not rows:
-        return []
-    totals: dict[str, object] = {}
-    max_ts = None
-    for r in rows:
-        totals[f"total_{r['fam']}"] = r["n"]
-        if r["fam"] == "orders":
-            totals["total_revenue"] = r["v"] or Decimal(0)
-        max_ts = max(max_ts, r["mx"]) if max_ts else r["mx"]
-    ops: list[Op] = [("hincr", "metrics:totals", totals)]
-    ops.append(
-        ("hset", "metrics:totals", {"last_updated": max_ts.isoformat()})
+    """The order-sensitive scalar tail for the executor sink — family
+    totals, revenue total, last_updated / last_activity — from the
+    <=4-row (fam) set of ``_grouped``. It stays driver-applied: hset/set
+    are last-writer-wins, so they need the single deterministic writer,
+    while everything partition-parallel is commutative hincr."""
+    return _scalar_ops(
+        _grouped(e).filter(F.col("g") == _GID["family"]).collect()
     )
-    ops.append(("set", "metrics:last_activity", max_ts.isoformat()))
-    return ops
 
 
 def _run_namespace(checkpoint: str, sink_id: str) -> str:
@@ -662,17 +674,19 @@ def _run_namespace(checkpoint: str, sink_id: str) -> str:
         return sink_id
 
 
-def _make_counter_push(url: str, sink_ns: str, epoch: int):
-    """Partition function for the counter frame. SELF-CONTAINED by
-    design: it captures only plain values and imports only
+def _make_push(url: str, sink: str, epoch: int, build_ops):
+    """Partition function applying ``build_ops(rows)`` — a list of
+    hincr / lpush_trim ops — as ONE atomic batch per (epoch,
+    partition). SELF-CONTAINED by design: it captures only plain values
+    and the caller's nested ``build_ops`` and imports only
     stdlib/pyspark — never this package — because cloudpickle
     serializes module-level references by name and the Python worker
     cannot import ecom_etl_proj_spark when the driver runs from a
-    foreign cwd (the round driver does exactly that). Idempotency: the
-    marker key is (sink_ns/ctr/p<partitionId>, epoch) — a task retry
-    or epoch replay of this partition is a store-side no-op; the
-    explicit repartition in the sink pins partition membership, so
-    replays present identical partitions."""
+    foreign cwd. Idempotency: the
+    marker key is (sink/p<partitionId>, epoch) — a task retry or epoch
+    replay of this partition is a store-side no-op; the explicit
+    repartition in the sink pins partition membership, so replays
+    present identical partitions."""
     is_redis = url.startswith(("redis://", "rediss://"))
     host_port = None if is_redis else _parse_tcp_url(url)
 
@@ -683,20 +697,15 @@ def _make_counter_push(url: str, sink_ns: str, epoch: int):
 
         from pyspark import TaskContext
 
-        per_key: dict[str, dict] = {}
-        for r in rows:
-            amt = r["amt_long"] if r["amt_long"] is not None else r["amt_dec"]
-            h = per_key.setdefault(r["key"], {})
-            h[r["field"]] = h.get(r["field"], 0) + amt
-        if not per_key:
+        ops = build_ops(rows)
+        if not ops:
             return
-        ops = [["hincr", k, fields] for k, fields in sorted(per_key.items())]
-        sink = f"{sink_ns}/ctr/p{TaskContext.get().partitionId()}"
+        part = f"{sink}/p{TaskContext.get().partitionId()}"
         if is_redis:
             import redis as _redis
 
             cli = _redis.Redis.from_url(url, decode_responses=True)
-            marker = f"_applied:{sink}"
+            marker = f"_applied:{part}"
             # WATCH-guarded optimistic apply: unlike the driver sink
             # (single writer per sink), foreachPartition can run the
             # SAME partition twice concurrently (speculation, zombie
@@ -709,12 +718,15 @@ def _make_counter_push(url: str, sink_ns: str, epoch: int):
                             pipe.unwatch()
                             return
                         pipe.multi()
-                        for _, key, fields in ops:
-                            for field, amt in fields.items():
+                        for kind, key, arg, *maxlen in ops:
+                            if kind == "lpush_trim":
+                                if arg:
+                                    pipe.lpush(key, *arg)
+                                pipe.ltrim(key, 0, maxlen[0] - 1)
+                                continue
+                            for field, amt in arg.items():
                                 if isinstance(amt, _D):
-                                    pipe.hincrbyfloat(
-                                        key, field, float(amt)
-                                    )
+                                    pipe.hincrbyfloat(key, field, float(amt))
                                 else:
                                     pipe.hincrby(key, field, amt)
                         pipe.sadd(marker, epoch)
@@ -722,8 +734,7 @@ def _make_counter_push(url: str, sink_ns: str, epoch: int):
                         return
                     except _redis.WatchError:
                         continue  # racer touched the marker; re-check
-        req = {"cmd": "apply_batch", "sink": sink, "epoch": epoch,
-               "ops": ops}
+        req = {"cmd": "apply_batch", "sink": part, "epoch": epoch, "ops": ops}
 
         def default(o):
             if isinstance(o, _D):
@@ -741,32 +752,38 @@ def _make_counter_push(url: str, sink_ns: str, epoch: int):
     return push
 
 
+def _make_counter_push(url: str, sink_ns: str, epoch: int):
+    """Partition function for the counter frame: one hincr op per key
+    (see ``_make_push`` for the self-containment and marker rules)."""
+
+    def build_ops(rows) -> list:
+        per_key: dict[str, dict] = {}
+        for r in rows:
+            amt = r["amt_long"] if r["amt_long"] is not None else r["amt_dec"]
+            h = per_key.setdefault(r["key"], {})
+            h[r["field"]] = h.get(r["field"], 0) + amt
+        return [["hincr", k, fields] for k, fields in sorted(per_key.items())]
+
+    return _make_push(url, f"{sink_ns}/ctr", epoch, build_ops)
+
+
 def _make_recent_push(url: str, sink_ns: str, epoch: int, recent_n: int):
-    """Partition function for the recent-N frame (self-contained, same
-    rules as ``_make_counter_push``). Rows are pre-bounded; each
-    family hashes to one partition, and the partition sorts its rows
-    (ts desc, event_id desc) so the pushed list is newest-first —
-    byte-identical JSON items to the driver path."""
-    is_redis = url.startswith(("redis://", "rediss://"))
-    host_port = None if is_redis else _parse_tcp_url(url)
+    """Partition function for the recent-N frame. Rows are pre-bounded;
+    each family hashes to one partition, and the partition sorts its
+    rows (ts desc, event_id desc) and trims them to recent_n, so the
+    pushed list is newest-first — byte-identical JSON items to the
+    driver path."""
 
-    def push(rows) -> None:
+    def build_ops(rows) -> list:
         import json as _json
-        import socket as _socket
-
-        from pyspark import TaskContext
 
         by_fam: dict[str, list] = {}
         for r in rows:
             by_fam.setdefault(r["fam"], []).append(r)
-        if not by_fam:
-            return
         ops = []
         for fam in sorted(by_fam):
-            fam_rows = sorted(
-                by_fam[fam],
-                key=lambda r: (r["ts"], r["event_id"]),
-                reverse=True,
+            newest = sorted(
+                by_fam[fam], key=lambda r: (r["ts"], r["event_id"]), reverse=True
             )[:recent_n]
             items = [
                 _json.dumps(
@@ -777,48 +794,12 @@ def _make_recent_push(url: str, sink_ns: str, epoch: int, recent_n: int):
                         "value": r["value"],
                     }
                 )
-                for r in fam_rows
+                for r in reversed(newest)
             ]
-            ops.append(
-                ["lpush_trim", f"recent:{fam}", list(reversed(items)),
-                 recent_n]
-            )
-        sink = f"{sink_ns}/rec/p{TaskContext.get().partitionId()}"
-        if is_redis:
-            import redis as _redis
+            ops.append(["lpush_trim", f"recent:{fam}", items, recent_n])
+        return ops
 
-            cli = _redis.Redis.from_url(url, decode_responses=True)
-            marker = f"_applied:{sink}"
-            # WATCH-guarded (see counter push: concurrent duplicate
-            # tasks must not double-apply)
-            with cli.pipeline(transaction=True) as pipe:
-                while True:
-                    try:
-                        pipe.watch(marker)
-                        if pipe.sismember(marker, epoch):
-                            pipe.unwatch()
-                            return
-                        pipe.multi()
-                        for _, key, items, maxlen in ops:
-                            if items:
-                                pipe.lpush(key, *items)
-                            pipe.ltrim(key, 0, maxlen - 1)
-                        pipe.sadd(marker, epoch)
-                        pipe.execute()
-                        return
-                    except _redis.WatchError:
-                        continue  # racer touched the marker; re-check
-        req = {"cmd": "apply_batch", "sink": sink, "epoch": epoch,
-               "ops": ops}
-        with _socket.create_connection(host_port, timeout=30) as s:
-            f = s.makefile("rwb")
-            f.write((_json.dumps(req) + "\n").encode())
-            f.flush()
-            resp = _json.loads(f.readline().decode())
-        if not resp.get("ok"):
-            raise RuntimeError(resp.get("error", "kv push failed"))
-
-    return push
+    return _make_push(url, f"{sink_ns}/rec", epoch, build_ops)
 
 
 def timeseries(store: KVStore, key: str) -> list[tuple[str, float]]:
@@ -883,9 +864,12 @@ def serve_consumer_metrics(
       executor rung is unreachable and auto stays driver-side (the
       embedded/local-store configuration); production deployments
       pass ``store_url`` so scale flips the switch.
-    - ``"driver"``: one atomic op batch per epoch, built
-      from per-batch aggregates collected to the driver. Bounded by
-      distinct keys per batch; the dashboard-scale path.
+    - ``"driver"``: one atomic op batch per epoch, built from ONE
+      collect — the GROUPING SETS aggregate unioned with the salted
+      recent-N rows (see ``consumer_metric_ops``) — so an epoch costs
+      isEmpty plus that collect, at most 4 Spark jobs. Bounded by
+      distinct keys per batch plus families x 32 x recent_n recent
+      rows; the dashboard-scale path.
     - ``"executor"`` (r11 judge item #5): the commutative counter
       families (minutely, per-product, per-user) and the per-family
       recent-N lists are pushed FROM THE EXECUTORS via
@@ -895,9 +879,12 @@ def serve_consumer_metrics(
       ``KVServer``), so driver memory and driver network are no longer
       a ceiling on per-batch key cardinality at 100 TB/day. Partition
       membership is pinned by an explicit hash repartition, making
-      epoch replays idempotent per partition; only the <=5-row scalar
-      tail (totals / last_activity — last-writer-wins ops that need a
-      single deterministic writer) still goes through the driver.
+      epoch replays idempotent per partition; only the scalar tail
+      from the <=4-row (fam) set (totals / last_activity — last-writer-
+      wins ops that need a single deterministic writer) still goes
+      through the driver. The pushed frames are the driver path's:
+      counter rows project the same GROUPING SETS aggregate, recent
+      rows are the same salted top-N.
       Parity with the driver path is test-asserted key-for-key.
     """
     if mode not in ("auto", "driver", "executor"):

@@ -4802,6 +4802,32 @@ def test_connected_components_local_gate_self_pairs_bounded(spark):
     }
 
 
+def test_connected_components_local_gate_drops_null_ids(spark):
+    """Pair rows with a NULL doc id — (x, NULL) and (NULL, NULL) —
+    carry no connectivity: the local union-find must drop them like
+    the star path's SQL comparisons do, instead of raising on the
+    int/None sort or emitting a NULL-labelled singleton."""
+    from ecom_etl_proj_spark.operators import dedup
+
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (5, None), (None, 6), (None, None), (3, 3)],
+        "doc_a long, doc_b long",
+    )
+    local = {
+        (r["doc_id"], r["component_id"])
+        for r in dedup.connected_components(
+            pairs, local_max_edges=100
+        ).collect()
+    }
+    star = {
+        (r["doc_id"], r["component_id"])
+        for r in dedup.connected_components(
+            pairs, algorithm="star", local_max_edges=0
+        ).collect()
+    }
+    assert local == star == {(0, 0), (1, 0), (2, 0), (3, 3)}
+
+
 def test_connected_components_rejects_unknown_algorithm(spark):
     import pytest
 

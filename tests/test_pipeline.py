@@ -559,6 +559,38 @@ def test_layer_validation_is_one_job(report, spark):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
+def test_layer_validation_job_budget_under_aqe(report, spark):
+    """With AQE on (the session default) each fused layer action is one
+    scan stage and one groupBy shuffle over the union of per-table row
+    streams: at most 2 jobs (map stage + result), independent of the
+    table count. A zero-row table still reports 0, both as a count and
+    as a violation total."""
+    import os as _os
+
+    _, out = report
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    frames = {
+        t: spark.read.parquet(_os.path.join(out, "dwh", t))
+        for t in batch.DWH_NOT_NULL
+    }
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("fused_counts_aqe", "layer counts under AQE")
+    counts = batch.fused_table_counts(frames)
+    assert len(list(tracker.getJobIdsForGroup("fused_counts_aqe"))) <= 2
+    sc.setJobGroup("fused_nn_aqe", "NOT NULL sweep under AQE")
+    viol = batch.fused_not_null_counts(frames, batch.DWH_NOT_NULL)
+    assert len(list(tracker.getJobIdsForGroup("fused_nn_aqe"))) <= 2
+    assert counts == {t: df.count() for t, df in frames.items()}
+    assert viol == dict.fromkeys(batch.DWH_NOT_NULL, 0)
+
+    empty = dict(frames, dim_geo=frames["dim_geo"].limit(0))
+    assert batch.fused_table_counts(empty)["dim_geo"] == 0
+    assert batch.fused_not_null_counts(empty, batch.DWH_NOT_NULL)[
+        "dim_geo"
+    ] == 0
+
+
 def test_concurrent_readers_never_see_torn_merge(spark, tmp_path):
     """The staged-swap MERGE's reader contract (r11: atomic symlink
     generation swap): readers hammering the dimension path while

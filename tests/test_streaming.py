@@ -1545,6 +1545,188 @@ def test_executor_push_parity_with_driver_path(
     )
 
 
+def _serve_batches(spark, batches, mode, recent_n=100, sink=None):
+    """Drive ``batches`` (DataFrames) through ONE serving stream, one
+    micro-batch per batch (one file each, maxFilesPerTrigger=1);
+    returns (store, the finished query). ``sink`` replaces the serving
+    sink with a raw foreachBatch function (the stream-overhead
+    baseline)."""
+    from ecom_etl_proj_spark import catalog
+
+    server = serving.KVServer().start() if mode == "executor" else None
+    store = server.store if server else serving.EmbeddedKVStore()
+    src = tempfile.mkdtemp(prefix="serve_src_")
+    ckpt = tempfile.mkdtemp(prefix="serve_ckpt_")
+    try:
+        for b in batches:
+            b.repartition(1).write.mode("append").parquet(src)
+        stream = (
+            spark.readStream.schema(catalog.SCHEMAS["events"])
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        if sink is not None:
+            q = (
+                stream.writeStream.foreachBatch(sink)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+        else:
+            q = serving.serve_consumer_metrics(
+                stream,
+                None if server else store,
+                ckpt,
+                recent_n=recent_n,
+                mode=mode,
+                store_url=server.url if server else None,
+            )
+        q.awaitTermination(120)
+        assert q.exception() is None, q.exception()
+        return store, q
+    finally:
+        if server:
+            server.stop()
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_serving_epoch_job_budget(spark, tables):
+    """A driver-mode epoch answers its micro-batch with ONE collect
+    (GROUPING SETS aggregate + bounded recent-N rows): at most 4 Spark
+    jobs including the isEmpty probe, counted in the stream's own job
+    group (its runId) net of what the same stream costs with a no-op
+    sink. The recent-N candidates are bounded by construction at
+    families x 32 x recent_n rows."""
+    from collections import Counter
+
+    batch = tables["events"].limit(1000)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(q):  # the stream runs its jobs in the group of its runId
+        return len(list(tracker.getJobIdsForGroup(str(q.runId))))
+
+    _, base = _serve_batches(spark, [batch], None, sink=lambda df, e: None)
+    _, run = _serve_batches(spark, [batch], "driver")
+    assert jobs(run) - jobs(base) <= 4, (jobs(run), jobs(base))
+
+    recent_n = 2
+    e = serving._prepared(batch)
+    got = serving.consumer_recent_rows(e, recent_n).count()
+    buckets = Counter(
+        (r["fam"], r["event_id"] % 32)
+        for r in e.select("fam", "event_id").collect()
+    )
+    assert got == sum(min(c, recent_n) for c in buckets.values())
+    assert got <= len(serving.FAMILY) * 32 * recent_n
+
+
+def _edge_batches(spark):
+    """Hand-built micro-batches covering the serving edge cases: a view
+    with a NULL user_id, props without $.k (and NULL props), NULL
+    values, equal ts broken by event_id, six views of which five share
+    one salt bucket (ids = 1 mod 32, over recent_n=3), and a second
+    batch holding only error events."""
+    def batch(rows):
+        return spark.createDataFrame(
+            rows, "event_id long, t string, user_id long, event_type string,"
+            " value double, props string",
+        ).select(
+            "event_id",
+            F.to_timestamp(F.concat(F.lit("2026-01-01 "), "t")).alias("ts"),
+            "user_id", "event_type", "value", "props",
+        )
+
+    mixed = batch([
+        (1, "10:00:05", 7, "view", 1.0, '{"k": 100}'),
+        (2, "10:00:05", None, "view", 2.0, '{"k": 100}'),
+        (33, "10:00:05", 7, "view", None, "{}"),
+        (65, "10:01:10", 8, "view", 1.5, '{"k": 101}'),
+        (97, "10:01:10", 8, "view", 0.5, '{"k": 101}'),
+        (129, "10:00:30", 9, "view", 1.0, '{"k": 100}'),
+        (3, "10:00:40", 7, "purchase", 10.25, '{"k": 100}'),
+        (4, "10:00:40", 8, "purchase", None, '{"k": 102}'),
+        (5, "10:02:00", 9, "click", 3.5, '{"x": 1}'),
+        (6, "10:02:00", 7, "signup", None, None),
+        (7, "10:03:00", 7, "error", 1.0, '{"k": 100}'),
+    ])
+    errors_only = batch([
+        (8, "10:04:00", 7, "error", 2.0, '{"k": 100}'),
+        (9, "10:05:00", None, "error", None, "{}"),
+    ])
+    return mixed, errors_only
+
+
+def _store_state(store):
+    import json as _json
+
+    keys = ["metrics:totals", "revenue:minutely", "cart:value:minutely",
+            "user:views"]
+    keys += list(serving.MINUTELY_KEY.values())
+    keys += [f"product:{f}" for f in serving.FAMILY.values()]
+    return (
+        {k: store.hgetall(k) for k in keys},
+        {
+            f: [_json.loads(i) for i in store.lrange(f"recent:{f}", 100)]
+            for f in serving.FAMILY.values()
+        },
+        store.get("metrics:last_activity"),
+    )
+
+
+def test_serving_edge_batches_store_parity(spark):
+    """Store state after the edge batches equals hand-computed values
+    in driver mode, and executor mode matches driver mode key for key.
+    NULL keys keep the plain-groupBy semantics: a view without user_id
+    counts under the field "None", props without $.k count in the
+    family totals but in no product hash, NULL values count but add
+    nothing to revenue, and the error-only batch changes nothing."""
+    mixed, errors_only = _edge_batches(spark)
+    recent_n = 3
+    drv, q = _serve_batches(spark, [mixed, errors_only], "driver", recent_n)
+    exc, _ = _serve_batches(spark, [mixed, errors_only], "executor", recent_n)
+    # the error-only batch was a micro-batch of its own
+    assert [p["batchId"] for p in q.recentProgress] == [0, 1]
+    hashes, recent, last = _store_state(drv)
+    m0, m1, m2 = (f"2026-01-01-10-0{i}" for i in range(3))
+    assert hashes == {
+        "metrics:totals": {
+            "total_views": 6, "total_orders": 2, "total_cart_adds": 1,
+            "total_wishlist_adds": 1, "total_revenue": Decimal("10.25"),
+            "last_updated": last,
+        },
+        "revenue:minutely": {m0: Decimal("10.25")},
+        "cart:value:minutely": {m2: Decimal("3.5")},
+        "user:views": {"7": 2, "None": 1, "8": 2, "9": 1},
+        "views:minutely": {m0: 4, m1: 2},
+        "cart:minutely": {m2: 1},
+        "wishlist:minutely": {m2: 1},
+        "orders:minutely": {m0: 2},
+        "product:views": {"100": 3, "101": 2},
+        "product:cart_adds": {},
+        "product:wishlist_adds": {},
+        "product:orders": {"100": 1, "102": 1},
+    }
+    # newest-first by (ts, event_id): the over-full salt bucket still
+    # yields the family's true newest three; equal ts -> higher id first
+    assert {f: [i["event_id"] for i in items] for f, items in recent.items()} == {
+        "views": [97, 65, 129],
+        "orders": [4, 3],
+        "cart_adds": [5],
+        "wishlist_adds": [6],
+    }
+    assert recent["orders"][0]["value"] is None
+    assert recent["wishlist_adds"][0]["user_id"] == 7
+    want_last = (
+        mixed.filter(F.col("event_type") != "error")
+        .agg(F.max("ts"))
+        .first()[0]
+        .isoformat()
+    )
+    assert last == want_last
+    assert _store_state(exc) == (hashes, recent, last)
+
+
 def test_serve_consumer_metrics_auto_cardinality_switch(spark, tables):
     """The r16 auto default (r15 verdict item #6) must pick the path
     by batch key cardinality: with the threshold above the batch's
