@@ -42,6 +42,9 @@ MINHASH_MAX_BUCKET = 256
 # but quadratic join cost — dropped before the inverted-index self-join
 # (standard hot-shingle/document-frequency cap).
 NGRAM_MAX_SHINGLE_FREQ = 128
+# Component graphs with at most this many deduped edges (and as many
+# self-pair singles) are solved on the driver (see connected_components).
+CC_LOCAL_MAX_EDGES = 100_000
 
 
 def md5_60(col) -> F.Column:
@@ -1147,10 +1150,13 @@ def _reset_stats(df: DataFrame) -> DataFrame:
     sizeInBytes, the stats visitor estimates a join as the PRODUCT of
     its children's sizes, so a loop that joins round state with
     itself SQUARES the carried estimate every round (digit count
-    doubles: measured 14 -> 2500 digits in 8 rounds on a 454-row
-    label table), and from round ~8 the driver burns minutes per
-    round multiplying million-digit BigIntegers inside join planning
-    while every task sits idle. AQE re-plans from true runtime sizes,
+    doubles: a label-propagation loop measured 14 -> 2500 digits in 8
+    rounds over a 454-node graph), and from round ~8 the driver burns
+    minutes per round multiplying million-digit BigIntegers inside
+    join planning while every task sits idle. The star contraction's
+    joins grow the estimate far more slowly (22-24 digits without the
+    reset on the multi-basin, path and random test graphs, 20 with
+    it); the reset keeps planning flat whatever the loop shape. AQE re-plans from true runtime sizes,
     so the reset (to the unknown-size default) costs nothing at
     execution."""
     try:
@@ -1181,33 +1187,17 @@ def _reset_stats(df: DataFrame) -> DataFrame:
         return df
 
 
-def _cc_materialize(pairs: DataFrame, _save):
-    """Materialize a pair plan ONCE into the three pieces the star
-    loop consumes: the checkpointed raw projection (``base``), the
-    deduped non-self edge list (``edges``, checkpointed), and its
-    exact row count (guide §1.2: don't recompute). Used by the
-    gate-disabled star path only since r17 — the gated path derives
-    these lazily on refusal (see connected_components)."""
-    base = _save(pairs.select("doc_a", "doc_b"))
-    edges = _save(
-        base.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    return base, edges, edges.count()
-
-
 def _cc_local(
     base: DataFrame, spark, max_edges: int, max_singles: int
 ) -> DataFrame | None:
     """Solve a BOUNDED component graph on the driver: one union-find
     pass over the collected edge list, min-id roots, singleton
-    self-pair nodes appended — output identical to both distributed
-    algorithms. This is broadcast-class driver state (guide §3.1: the
-    small side of a broadcast join is collected the same way), and the
-    collect is bounded by LIMIT regardless of input shape (~16
-    bytes/row — the default 100k caps are ~3 MB) with the result frame
-    labels-only. The win is job count: a 2-round star contraction over
+    self-pair nodes appended — output identical to the distributed
+    star contraction (``_cc_star``). This is broadcast-class driver
+    state (guide §3.1: the small side of a broadcast join is collected
+    the same way), and the collect is bounded by LIMIT regardless of
+    input shape (~16 bytes/row — the default 100k caps are ~3 MB) with
+    the result frame labels-only. The win is job count: a 2-round star contraction over
     a 224-edge sf0.1 survivor graph costs ~26 AQE jobs / 6.8s of pure
     orchestration; this path is one collect + one tiny parallelize.
 
@@ -1223,15 +1213,15 @@ def _cc_local(
     exceeds its bound, and an untruncated one yields exact per-class
     counts, so the gate decision is identical to counting each class
     separately. On refusal this returns ``None`` and the caller falls
-    through to the distributed algorithm, whose singles branch never
-    touches the driver. Keeping the in-bound singles ON the driver
-    (rather than a distributed anti-join union) keeps the result a
+    through to ``_cc_star``, whose singles branch never touches the
+    driver. Keeping the in-bound singles ON the driver (rather than a
+    distributed anti-join union) keeps the result a
     pure local table — CC consumers re-execute the labels frame per
     action, and a measured distributed-singles variant paid its
     exchange once per consumer (A/B in OPTIMIZATION_r16.md).
 
     Rows with a NULL doc id are dropped before the collect, as the
-    distributed paths' SQL comparisons drop them: a (x, NULL) pair is
+    star path's SQL comparisons drop them: a (x, NULL) pair is
     no edge and a (NULL, NULL) pair no singleton."""
     cap = max_edges + max_singles + 1
     rows = (
@@ -1272,18 +1262,11 @@ def _cc_local(
     return spark.createDataFrame(labels, "doc_id long, component_id long")
 
 
-def _cc_star(
-    base: DataFrame,
-    edges: DataFrame,
-    n_edges: int,
-    max_iterations: int,
-    _save,
-) -> DataFrame:
+def _cc_star(base: DataFrame, max_iterations: int, _save) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et
     al. 2014, "Connected Components in MapReduce and Beyond"):
-    O(log^2 n) rounds on ANY graph — the published answer for
-    components whose diameter outruns label propagation. Each round
-    REWRITES the edge set instead of propagating labels:
+    O(log^2 n) rounds on ANY graph, whatever its diameter. Each round
+    REWRITES the edge set:
 
     - large-star (per center u over the symmetric edge list): every
       strictly-larger neighbor w re-attaches to m = min(N(u) + {u});
@@ -1293,31 +1276,30 @@ def _cc_star(
     Edges converge to one-level stars rooted at each component's min
     id; both steps are groupBy-min + join — no per-node neighbor
     lists collected, so hub nodes cost a shuffle skew, not memory.
-    Per-round state is checkpointed + stats-reset like the label
-    loop. Convergence = edge set unchanged over a full (large,
-    small) round: checked as count equality + one-sided except —
-    a distinct-set equality.
+    The deduped edge list and each round's state are checkpointed +
+    stats-reset through ``_save``. Convergence = edge set unchanged
+    over a full (large, small) round: checked as count equality + one-
+    sided except — a distinct-set equality.
 
-    Self-loop contract (r16, r15 ADVICE): a node appearing ONLY as a
-    self-pair (doc_a == doc_b) is an isolated single-node component
-    and is emitted labeled with itself — the contraction loop drops
-    self-loops up front (they carry no connectivity), so those nodes
-    are collected separately and unioned back unless a real edge
-    already covers them. This matches the label path, where the
-    symmetric explode keeps (n, n) and min-propagation labels the
-    node with itself; before r16 the star path silently omitted such
-    nodes, contradicting the identical-output claim (no in-repo
-    caller emits self-pairs — the guard is for the public API).
+    ``base`` is the checkpointed raw (doc_a, doc_b) projection; both
+    the edge list and ``self_nodes`` derive from it, so the upstream
+    pair plan never re-executes (for LSH-derived pairs that re-run was
+    ~2.3s of a 4.4s warm star-CC at sf0.1).
+
+    Self-loop contract (r16): a node appearing ONLY as a self-pair
+    (doc_a == doc_b) is an isolated single-node component and is
+    emitted labeled with itself — the contraction drops self-loops up
+    front (they carry no connectivity), so those nodes are collected
+    separately and unioned back unless a real edge already covers
+    them; ``_cc_local`` emits exactly the same rows. NULL doc ids fall
+    out of the SQL comparisons.
     """
-    # ``base``/``edges``/``n_edges`` arrive pre-materialized from
-    # ``_cc_materialize`` (r16, guide §5/§1.2): the raw (doc_a, doc_b)
-    # projection is localCheckpointed ONCE and both ``self_nodes`` and
-    # ``edges`` derive from it — before r16 only ``edges`` was
-    # checkpointed and the final leaves∪roots∪singles frame re-executed
-    # the ENTIRE upstream pair plan (for LSH-derived pairs: a second
-    # full candidate generation + Jaccard verification; ~2.3s of the
-    # 4.4s warm star-CC cost at sf0.1). At 100 TB the checkpoint is
-    # edge-scale — the same storage class the per-round state uses.
+    edges = _save(
+        base.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    n_edges = edges.count()
     self_nodes = (
         base.filter(F.col("doc_a") == F.col("doc_b"))
         .select(F.col("doc_a").alias("doc_id"))
@@ -1368,7 +1350,7 @@ def _cc_star(
             break
     if not converged:
         raise RuntimeError(
-            f"connected_components(star) did not converge within "
+            f"connected_components did not converge within "
             f"{max_iterations} rounds — star contraction is O(log^2 n) "
             "rounds on any graph, so hitting this cap indicates a bug "
             "or a truly astronomical component; raise max_iterations"
@@ -1397,84 +1379,55 @@ def connected_components(
     pairs: DataFrame,
     max_iterations: int = 100,
     checkpoint_dir: str | None = None,
-    algorithm: str = "star",
-    local_max_edges: int | None = None,
+    local_max_edges: int = CC_LOCAL_MAX_EDGES,
 ) -> DataFrame:
-    """Connected components over a pair list: (doc_id, component_id).
+    """Connected components over a pair list: (doc_id, component_id),
+    each component labeled with its smallest doc id.
 
     Near-dup PAIRS aren't actionable until they become CLUSTERS (keep
-    one representative per component, drop the rest).
+    one representative per component, drop the rest). A pair with
+    doc_a == doc_b carries no connectivity, so a node that appears only
+    in such self-pairs comes back as its own singleton component; a
+    pair with a NULL doc id is dropped.
 
-    ``local_max_edges`` (r16): graphs whose deduped non-self edge
-    count is at or below this bound are solved ON THE DRIVER with one
-    union-find pass (``_cc_local``) — identical output, one collect
-    instead of ~13 AQE jobs per contraction round (measured 6.8s → <1s
-    on the 224-edge sf0.1 survivor graph; near-dup graphs are sparse,
-    so even large corpora often land here). The bound gates DRIVER
-    MEMORY exactly like a broadcast-join threshold (~16 bytes/edge;
-    the 100k default is ~2 MB collected) and is data-derived — above
-    it the distributed algorithms below run unchanged, so 100 TB
-    worst-case graphs never touch the driver. The same bound caps the
-    self-pair singles class inside the gate's ONE LIMIT-capped collect
-    (r17): no input shape can pull more than ~2 x local_max_edges + 1
-    rows onto the driver, and a graph over either bound falls through
-    to the distributed path. Default from
-    ``$SPARK_GRAFT_CC_LOCAL_MAX_EDGES`` (100000); pass 0 to force the
-    distributed path (loop-mechanics tests do).
+    One linear flow: the raw (doc_a, doc_b) projection is checkpointed
+    once; if ``local_max_edges`` is non-zero the driver-side union-find
+    (``_cc_local``) tries to solve the graph from one LIMIT-capped
+    collect; otherwise, or when the graph is over that bound, the
+    distributed large-star / small-star contraction (``_cc_star``) runs
+    over the deduped edge list. Both produce identical output.
 
-    ``algorithm="star"`` (default since r15): alternating large-star /
-    small-star contraction — O(log^2 n) rounds on ANY graph shape, the
-    published scale-safe choice (see ``_cc_star``). Measured on the
-    sf0.001 mutual-kNN graph (454 nodes, a 317-node long-diameter
-    component): star 4.3s vs label-propagation 19.3s; on easy
-    star/chain near-dup graphs the two are within noise. Both
-    algorithms produce identical output — including for nodes that
-    appear only as self-pairs, which come back as singleton
-    components (equivalence pytest over path / multi-component /
-    multi-basin / random / self-loop / mutual graphs).
+    ``local_max_edges`` (default ``CC_LOCAL_MAX_EDGES``): a graph whose
+    deduped non-self edge count and self-pair singles count are both at
+    or below this bound is solved ON THE DRIVER — one collect instead
+    of ~13 AQE jobs per contraction round (measured 6.8s → <1s on the
+    224-edge sf0.1 survivor graph; near-dup graphs are sparse, so even
+    large corpora often land here). The bound gates DRIVER MEMORY
+    exactly like a broadcast-join threshold (~16 bytes/row, no input
+    shape pulls more than 2 x local_max_edges + 1 rows); above it the
+    graph never touches the driver. Pass 0 to force the distributed
+    path (loop-mechanics tests do).
 
-    ``algorithm="label"``: min-label propagation WITH PATH
-    COMPRESSION: every node starts labeled with itself; each round
-    every node adopts the smallest label among itself and its
-    neighbors (one hop), then adopts its LABEL's label to fixpoint
-    (the compression loop — labels are node ids, so each pass is an
-    equi-join that lets labels leap along already-discovered paths).
-    Converged when no label changes. Each round is two joins + one
-    min-aggregate — all shuffles on doc_id, state is one label per
-    node — plus an inner compose-to-fixpoint pass over the label
-    table (true pointer doubling: each pass squares the reach along
-    already-discovered pointer chains). Round count: compression
-    collapses chain-shaped LABEL structures in O(log) passes — this
-    matters for the path graphs the over-cap bucket expansion in
-    ``dedup_minhash_lsh`` produces — but information still enters a
-    node only through graph EDGES (one hop per round), so the outer
-    round count is bounded by the largest component's effective
-    diameter net of pointer shortcuts. Near-dup components (stars,
-    short chains) converge in a handful of rounds; a long-diameter
-    geometric graph (the mutual kNN graph of an embedding corpus: the
-    sf0.001 graph has a 317-node component needing >20 hop rounds)
-    is the realistic worst case, hence the 100-round default cap
-    with each round priced flat (see ``_reset_stats``).
-    ``max_iterations`` bounds runaway graphs; hitting it without
-    convergence RAISES rather than silently returning split
-    components (wrong representatives would silently diverge from
-    the transitive-closure oracle). The label path's known scale
-    ceiling — a component whose diameter outruns pointer shortcuts
-    costs one round per hop — is exactly why "star" is the default:
-    contraction rewrites the EDGE set per round instead of labels
-    and its round count is O(log^2 n) regardless of diameter.
+    ``max_iterations`` bounds the contraction rounds that change the
+    edge set (star needs O(log^2 n) on any graph; one extra round only
+    confirms the fixpoint). Hitting it without convergence RAISES
+    rather than silently returning split components (wrong
+    representatives would silently diverge from the
+    transitive-closure oracle).
 
     Iteration state management (the part that decides whether this
-    survives at scale): ``edges`` is persisted once — every round joins
-    against it, and without the cache each round would re-run the whole
-    upstream LSH candidate generation. Each round's labels are
-    ``localCheckpoint``-ed (eager): the round's join work is
-    materialized exactly once, the logical plan is truncated to the
-    stored blocks, so per-round cost and planning time stay CONSTANT
-    instead of growing with round number (the naive unpersisted loop is
-    O(k) recompute in round k and O(k) Catalyst analysis depth).
-    Superseded round state is dropped eagerly; the label table itself
-    is one (node, label) row per clustered doc.
+    survives at scale): the raw projection is checkpointed once, so the
+    upstream pair plan (for LSH-derived pairs: a full candidate
+    generation and Jaccard verification) runs exactly once and the
+    final leaves ∪ roots ∪ singles frame reads stored blocks. The
+    deduped edge list and every round's large-star and small-star edge
+    sets are checkpointed eagerly and stats-reset (``_reset_stats``):
+    each round's join work is materialized exactly once and the logical
+    plan is truncated to the stored blocks, so per-round cost and
+    planning time stay CONSTANT instead of growing with round number
+    (the naive unpersisted loop is O(k) recompute in round k and O(k)
+    Catalyst analysis depth). Round state is edge-scale: one row per
+    edge of the current contraction.
 
     This is the standard large-scale formulation (iterative — the
     driver verifies it against a recursive-CTE transitive-closure
@@ -1505,173 +1458,14 @@ def connected_components(
         sc = pairs.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
             sc.setCheckpointDir(checkpoint_dir)
-    if algorithm not in ("star", "label"):
-        raise ValueError(
-            f"unknown connected-components algorithm {algorithm!r}:"
-            " expected 'label' (min-label propagation + path"
-            " compression — fastest on the star/chain components"
-            " near-dup pipelines produce) or 'star' (large-star/"
-            "small-star contraction — O(log^2 n) rounds on any graph,"
-            " the scale-safe choice for long-diameter components)"
-        )
-    if local_max_edges is None:
-        import os as _os
-
-        local_max_edges = int(
-            _os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "100000")
-        )
-    base = None
+    base = _save(pairs.select("doc_a", "doc_b"))
     if local_max_edges:
-        # Checkpoint the raw pair projection once; the gate's single
-        # bounded collect (see _cc_local) both sizes the graph and
-        # solves it when within bounds — the hot path is exactly TWO
-        # actions (checkpoint + collect). Only the refusal path — a
-        # graph over the bound, where distributed work dominates
-        # anyway — re-derives the edge list for the star loop.
-        base = _save(pairs.select("doc_a", "doc_b"))
-        # None = edges or self-pair singles overflowed the bound:
-        # fall through to the distributed path, which handles both
-        # without driver state
         local = _cc_local(
             base, pairs.sparkSession, local_max_edges, local_max_edges
         )
         if local is not None:
             return local
-        if algorithm == "star":
-            star_edges = _save(
-                base.select(
-                    F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-                )
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-            )
-            return _cc_star(
-                base, star_edges, star_edges.count(), max_iterations, _save
-            )
-    elif algorithm == "star":
-        return _cc_star(*_cc_materialize(pairs, _save), max_iterations, _save)
-    # Symmetric edge expansion in ONE scan of the pair list (explode of
-    # both orientations) — the union-of-two-selects form executed the
-    # whole upstream pair plan TWICE on first materialization, which
-    # for LSH-derived pairs meant a second full candidate generation.
-    # When the local gate already materialized ``base``, read from it
-    # instead of re-running the raw pair plan.
-    edges = (
-        (base if base is not None else pairs).select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        .persist()
-    )
-    # Seed labels with min(self, neighbors) in ONE aggregation over the
-    # symmetric edge list — exactly what the first hop round would
-    # compute, for one bounded groupBy instead of that round's two
-    # joins. Any componentwise upper bound converges to the component
-    # minimum under min-propagation, so semantics are unchanged; for
-    # pair/star-shaped components (the overwhelming near-dup case) the
-    # seed is already the fixpoint and the loop's first round is the
-    # confirmation.
-    labels = _save(
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("mn"))
-        .select(
-            F.col("src").alias("node"),
-            F.least(F.col("src"), F.col("mn")).alias("label"),
-        )
-    )
-    converged = False
-    # ``max_iterations`` bounds label-CHANGING rounds; one extra pass is
-    # allowed purely to confirm the fixpoint, so a run whose final
-    # permitted round happens to reach convergence confirms instead of
-    # raising spuriously (confirming costs one no-change round by
-    # construction — the check can only observe the round it ran in).
-    # Inner path-compression cap: each pass composes the label map
-    # with itself (label <- label(label)), so reach doubles per pass —
-    # 30 passes cover pointer chains of 2^30 nodes, far past any real
-    # component, and the loop exits at the compression fixpoint long
-    # before the cap on real graphs.
-    compress_cap = 30
-    for _ in range(max_iterations + 1):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        updated = _save(
-            labels.join(
-                neighbor_min, labels["node"] == neighbor_min["src"], "left"
-            ).select(
-                "node",
-                F.col("label").alias("old_label"),
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("nbr_label"), F.col("label")),
-                ).alias("label"),
-            )
-        )
-        # Path compression TO FIXPOINT: adopt the label's own label
-        # until nothing moves. Labels are node ids, so each pass is one
-        # equi-join of the label table against itself — reach along
-        # already-discovered pointer chains doubles per pass (true
-        # pointer doubling). A single compose per round (the r11-r14
-        # shape) advances too slowly on long geometric chains: the
-        # sf0.001 mutual 3-NN graph's 317-node component was still
-        # churning after 24 hop rounds, while full compression
-        # converges the same graph in a handful. Each pass is
-        # checkpointed so per-pass cost stays flat.
-        for _ in range(compress_cap):
-            lbl2 = updated.select(
-                F.col("node").alias("l_node"), F.col("label").alias("l_label")
-            )
-            compressed = _save(
-                updated.join(
-                    lbl2, updated["label"] == lbl2["l_node"], "left"
-                ).select(
-                    "node",
-                    "old_label",
-                    F.col("label").alias("pre_label"),
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("l_label"), F.col("label")),
-                    ).alias("label"),
-                )
-            )
-            done = compressed.filter(
-                F.col("label") != F.col("pre_label")
-            ).isEmpty()
-            updated = compressed.select("node", "old_label", "label")
-            if done:
-                break
-        labels = updated.select("node", "label")
-        # Convergence check folded into the round's own state: the
-        # pre-round label was carried through the update, so "did any
-        # label change" is a narrow early-exit scan of the blocks the
-        # round just materialized — not the join-plus-count job per
-        # round the previous shape paid (that job re-shuffled the whole
-        # label table against its predecessor every iteration).
-        if updated.filter(F.col("label") != F.col("old_label")).isEmpty():
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iterations} "
-            "label-changing iterations — component labels would be split and "
-            "representatives wrong; raise max_iterations (rounds needed are "
-            "~log_2 of the largest component's diameter with per-round full "
-            "path compression)"
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component_id"))
+    return _cc_star(base, max_iterations, _save)
 
 
 def dedup_clusters(
@@ -1714,8 +1508,8 @@ def representative_selection(
     The selection is a single component-grain aggregation over a
     (quality, -id) struct max — O(1) state per component, no per-group
     row buffer, no window over the corpus. Components come from the
-    same checkpointed label propagation dedup_clusters uses; quality is
-    a row-local Catalyst expression. ``hash_mode`` as in the family.
+    same ``connected_components`` dedup_clusters uses; quality is a
+    row-local Catalyst expression. ``hash_mode`` as in the family.
     """
     from ecom_etl_proj_spark.operators.textops import text_quality
 
@@ -1753,8 +1547,8 @@ def dedup_savings_report(
     only 30% of reclaimable bytes; one 10k-doc boilerplate cluster is
     half the win").
 
-    Composition: ``dedup_clusters`` components (checkpointed label
-    propagation over the LSH-verified pair list — only docs in some
+    Composition: ``dedup_clusters`` components (``connected_components``
+    over the LSH-verified pair list — only docs in some
     near-dup pair appear), each member decorated with its byte size
     via a doc_id-keyed join against the catalog's ``n_chars`` column
     (no text re-scan), one component-grain aggregation (bounded rows:

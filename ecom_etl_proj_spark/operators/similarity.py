@@ -18,7 +18,7 @@ Vector math comes in two implementations: Catalyst higher-order
 functions (functions/vectors.py — JVM-side, exactly mirrorable in the
 DuckDB oracles, the default on every registered entry) and, for the
 production hot paths, Arrow-batched numpy matmuls
-(``_assign_cells_arrow`` / ``_embedding_knn_arrow`` — HOFs are
+(``_assign_cells_arrow`` / ``_cosine_sim_arrow`` — HOFs are
 CodegenFallback, i.e. interpreted, so dense linear algebra is the one
 place a vectorized Pandas-UDF path beats the built-ins by an order of
 magnitude; A/B-tested identical, opt-in via ``impl``/``assign_impl``).
@@ -85,30 +85,38 @@ def embedding_knn(
     corpus-representative. Exact search itself is query-agnostic —
     the knob exists for the audits that compose it.
     """
-    if impl == "arrow":
-        return _embedding_knn_arrow(t, n_queries, k, query_stride)
     emb = t["embeddings"]
     qpred = (
         F.col("vec_id") % query_stride == 0
         if query_stride is not None
         else F.col("vec_id") < n_queries
     )
-    queries = emb.filter(qpred).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        V.norm("embedding").alias("q_norm"),
-    )
-    corpus = emb.select("vec_id", "embedding", V.norm("embedding").alias("c_norm"))
-    joined = corpus.crossJoin(F.broadcast(queries)).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    sim = joined.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            V.dot("q_emb", "embedding") / (F.col("q_norm") * F.col("c_norm")), 6
-        ).alias("cosine_sim"),
-    )
+    if impl == "arrow":
+        q_rows = emb.filter(qpred).select("vec_id", "embedding").collect()
+        sim = _cosine_sim_arrow(emb, q_rows).filter(
+            F.col("query_id") != F.col("neighbor_id")
+        )
+    else:
+        queries = emb.filter(qpred).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_emb"),
+            V.norm("embedding").alias("q_norm"),
+        )
+        corpus = emb.select(
+            "vec_id", "embedding", V.norm("embedding").alias("c_norm")
+        )
+        joined = corpus.crossJoin(F.broadcast(queries)).filter(
+            F.col("vec_id") != F.col("query_id")
+        )
+        sim = joined.select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.round(
+                V.dot("q_emb", "embedding")
+                / (F.col("q_norm") * F.col("c_norm")),
+                6,
+            ).alias("cosine_sim"),
+        )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
@@ -119,29 +127,31 @@ def embedding_knn(
     )
 
 
-def _embedding_knn_arrow(
-    t: dict[str, DataFrame], n_queries: int, k: int,
-    query_stride: int | None = None,
+def _cosine_sim_arrow(
+    corpus: DataFrame,
+    q_rows: list,
+    q_carry: tuple[tuple[str, str], ...] = (),
+    c_carry: tuple[tuple[str, str], ...] = (),
 ) -> DataFrame:
-    """Vectorized brute-force kNN: the bounded query block (n_queries x
-    dim floats) is collected once and closure-captured; each corpus
-    Arrow batch emits its (vec_id, query_id, cosine) rows from one BLAS
-    matmul. Row volume and the final per-query top-k window are
-    identical to the expression form — only the per-pair dot/norm
-    arithmetic moves from interpreted HOF folds to C. Same result
-    contract as ``embedding_knn`` (A/B-tested)."""
-    emb = t["embeddings"]
-    qpred = (
-        F.col("vec_id") % query_stride == 0
-        if query_stride is not None
-        else F.col("vec_id") < n_queries
-    )
-    q_rows = emb.filter(qpred).select(
-        "vec_id", "embedding"
-    ).collect()
-    q_rows.sort(key=lambda r: r["vec_id"])
+    """(query_id, *q_carry, *c_carry, neighbor_id, cosine_sim) for every
+    (corpus row, query row) pair: the exact-kNN Arrow kernel behind
+    ``embedding_knn(impl='arrow')`` and
+    ``embedding_knn_classify(impl='arrow')``.
+
+    The bounded query block (``q_rows``: collected rows with
+    ``vec_id``, ``embedding`` and the carried fields; n_queries x dim
+    floats) is closure-captured; each corpus Arrow batch emits its rows
+    from one (batch x dim) @ (dim x queries) BLAS matmul. Row volume
+    and rounding (HALF_UP at 1e-6, matching F.round) are identical to
+    the expression forms — only the per-pair dot/norm arithmetic moves
+    from interpreted HOF folds to C. ``q_carry`` / ``c_carry`` are
+    (source, output) column pairs tiled from the query rows / repeated
+    from the corpus batch alongside each cosine; both take the type of
+    the corpus column named ``source``."""
+    q_rows = sorted(q_rows, key=lambda r: r["vec_id"])
     q_ids = [int(r["vec_id"]) for r in q_rows]
     q_mat = [[float(x) for x in r["embedding"]] for r in q_rows]
+    q_cols = [(out, [r[src] for r in q_rows]) for src, out in q_carry]
 
     def batches(it):
         import numpy as np
@@ -150,6 +160,7 @@ def _embedding_knn_arrow(
         q = np.asarray(q_mat, dtype=np.float64)
         qn = (q / np.linalg.norm(q, axis=1)[:, None]).T  # dim x queries
         ids = np.asarray(q_ids, dtype=np.int64)
+        q_vals = [(out, np.asarray(vals)) for out, vals in q_cols]
         for pdf in it:
             if not len(pdf):
                 continue
@@ -163,29 +174,24 @@ def _embedding_knn_arrow(
             # F.round's BigDecimal HALF_UP in the expression form —
             # np.round is IEEE half-to-even, which can diverge on exact
             # x.xxxxx5 ties. Any residual divergence is the scaled
-            # double multiply itself (last-ulp), documented above.
+            # double multiply itself (last-ulp).
             rounded = np.sign(flat) * np.floor(np.abs(flat) * 1e6 + 0.5) / 1e6
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(ids, n_rows),
-                    "neighbor_id": np.repeat(
-                        pdf["vec_id"].to_numpy(), n_q
-                    ),
-                    "cosine_sim": rounded,
-                }
+            out = {"query_id": np.tile(ids, n_rows)}
+            out.update((o, np.tile(vals, n_rows)) for o, vals in q_vals)
+            out.update(
+                (o, np.repeat(pdf[src].to_numpy(), n_q)) for src, o in c_carry
             )
+            out["neighbor_id"] = np.repeat(pdf["vec_id"].to_numpy(), n_q)
+            out["cosine_sim"] = rounded
+            yield pd.DataFrame(out)
 
-    sim = emb.mapInPandas(
-        batches, schema="query_id long, neighbor_id long, cosine_sim double"
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
+    types = {f.name: f.dataType.simpleString() for f in corpus.schema.fields}
+    schema = ", ".join(
+        ["query_id long"]
+        + [f"{out} {types[src]}" for src, out in (*q_carry, *c_carry)]
+        + ["neighbor_id long", "cosine_sim double"]
     )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return corpus.mapInPandas(batches, schema=schema)
 
 
 def embedding_knn_classify(
@@ -213,8 +219,8 @@ def embedding_knn_classify(
     ``impl='arrow'`` (r17, r16 verdict item #3): the per-(corpus row,
     query) cosine — the query's interpreted-HOF fold and the measured
     hot stage — runs as one (batch x dim) @ (dim x queries) BLAS
-    matmul per Arrow batch, exactly ``_embedding_knn_arrow``'s
-    vectorization with the label columns carried through; the top-k
+    matmul per Arrow batch — the same ``_cosine_sim_arrow`` kernel as
+    ``embedding_knn``, with the label columns carried through; the top-k
     window and the vote stages are unchanged. Production mode
     (A/B-tested identical on this corpus; last-ulp BLAS divergence can
     in principle flip a near-tied neighbor, so the oracle-pinned
@@ -224,7 +230,13 @@ def embedding_knn_classify(
     """
     emb = t["embeddings"]
     if impl == "arrow":
-        sim = _embedding_knn_classify_arrow_sim(emb, n_queries)
+        cols = ("vec_id", "embedding", "label")
+        sim = _cosine_sim_arrow(
+            emb.filter(F.col("vec_id") >= n_queries).select(*cols),
+            emb.filter(F.col("vec_id") < n_queries).select(*cols).collect(),
+            q_carry=(("label", "true_label"),),
+            c_carry=(("label", "n_label"),),
+        )
     else:
         queries = emb.filter(F.col("vec_id") < n_queries).select(
             F.col("vec_id").alias("query_id"),
@@ -271,69 +283,6 @@ def embedding_knn_classify(
         F.when(-F.col("b.neg") == F.col("true_label"), 1)
         .otherwise(0)
         .alias("correct"),
-    )
-
-
-def _embedding_knn_classify_arrow_sim(
-    emb: DataFrame, n_queries: int
-) -> DataFrame:
-    """(query_id, true_label, n_label, neighbor_id, cosine_sim): the
-    classify twin's neighbor-similarity frame, computed like
-    ``_embedding_knn_arrow`` — the bounded labeled query block
-    (n_queries x dim floats) collected once and closure-captured, each
-    corpus Arrow batch emitting its rows from one BLAS matmul with the
-    neighbor label tiled alongside. Row volume and rounding (HALF_UP
-    at 1e-6, matching F.round) are identical to the expression form —
-    only the per-pair dot/norm arithmetic moves to C."""
-    q_rows = emb.filter(F.col("vec_id") < n_queries).select(
-        "vec_id", "embedding", "label"
-    ).collect()
-    q_rows.sort(key=lambda r: r["vec_id"])
-    q_ids = [int(r["vec_id"]) for r in q_rows]
-    q_labels = [int(r["label"]) for r in q_rows]
-    q_mat = [[float(x) for x in r["embedding"]] for r in q_rows]
-
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        q = np.asarray(q_mat, dtype=np.float64)
-        qn = (q / np.linalg.norm(q, axis=1)[:, None]).T  # dim x queries
-        ids = np.asarray(q_ids, dtype=np.int64)
-        labels = np.asarray(q_labels, dtype=np.int64)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            v = np.asarray(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-            )
-            cos = (v / np.linalg.norm(v, axis=1)[:, None]) @ qn
-            n_rows, n_q = cos.shape
-            flat = cos.ravel()
-            # Half-UP rounding (away from zero on exact .5), matching
-            # F.round's BigDecimal HALF_UP — same note as
-            # _embedding_knn_arrow
-            rounded = np.sign(flat) * np.floor(np.abs(flat) * 1e6 + 0.5) / 1e6
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(ids, n_rows),
-                    "true_label": np.tile(labels, n_rows),
-                    "n_label": np.repeat(
-                        pdf["label"].to_numpy(), n_q
-                    ),
-                    "neighbor_id": np.repeat(
-                        pdf["vec_id"].to_numpy(), n_q
-                    ),
-                    "cosine_sim": rounded,
-                }
-            )
-
-    return emb.filter(F.col("vec_id") >= n_queries).select(
-        "vec_id", "embedding", "label"
-    ).mapInPandas(
-        batches,
-        schema="query_id long, true_label int, n_label int,"
-        " neighbor_id long, cosine_sim double",
     )
 
 
@@ -1218,7 +1167,7 @@ def embedding_dedup_clusters(
 
     The vector-space mirror of ``dedup.dedup_clusters``: pairs come from
     the candidate-gated ``embedding_near_dup`` (LSH-bucketed, never
-    all-pairs), then the same bounded min-label propagation clusters
+    all-pairs), then the same ``connected_components`` clusters
     them — so a curation pipeline can drop semantic duplicates the way
     it drops textual ones (keep min vec_id per component). Every stage
     is the already-scale-audited path; this just composes them.
@@ -3673,9 +3622,9 @@ def mutual_knn_clusters(
     (``embedding_dedup_clusters``) is prone to on dense corpora.
 
     Scale shape: ``knn_graph`` (cell-keyed, never all-pairs) + ONE
-    self-join of the n x k edge list on the reversed pair + the
-    bounded min-label propagation of ``connected_components``
-    (localCheckpointed loop, iterations ~ graph diameter). Nodes with
+    self-join of the n x k edge list on the reversed pair +
+    ``connected_components`` (driver union-find on a bounded graph,
+    else star contraction: O(log^2 n) checkpointed rounds). Nodes with
     no mutual edge are absent (singletons need no dedup decision).
 
     Output: (vec_id, component_id, is_representative).

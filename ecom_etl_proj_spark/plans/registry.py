@@ -3805,8 +3805,9 @@ register(
     """,
 )
 
-# Connected-components clustering over LSH pairs: Spark runs iterative
-# min-label propagation; the oracle reaches the same fixpoint with a
+# Connected-components clustering over LSH pairs: Spark runs
+# connected_components (driver union-find on bounded graphs, star
+# contraction above the bound); the oracle reaches the same fixpoint with a
 # recursive CTE (transitive closure + min over the reachable set) over
 # the SAME md5-rebased MinHash pair list (_MINHASH_CTES), so the whole
 # pipeline — candidate generation, verification, clustering — is
@@ -6497,7 +6498,7 @@ register(
 
 # SemDeDup-style clusters over the MUTUAL kNN graph (r12): edges only
 # where both endpoints list each other in their top-3; recursive-CTE
-# closure mirrors the engine's min-label propagation.
+# closure mirrors the engine's min-id connected components.
 register(
     "mutual_knn_clusters",
     lambda t: similarity.mutual_knn_clusters(t),

@@ -564,8 +564,12 @@ def test_chunking_reconstruction_property(spark, tables):
 
 
 def test_connected_components_vs_union_find(spark):
-    """Property (hypothesis): label propagation must agree with a plain
-    union-find on random edge lists."""
+    """Property (hypothesis): connected_components must agree with a
+    plain union-find on random edge lists — self-pairs included, plus
+    a (NULL, x) and a (NULL, NULL) row — on both paths: the forced
+    distributed star contraction (``local_max_edges=0``) and the
+    default driver-side gate. A node seen only in self-pairs is its
+    own singleton component; NULL rows carry no connectivity."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -594,22 +598,24 @@ def test_connected_components_vs_union_find(spark):
     @settings(max_examples=6, deadline=None)
     @given(
         edges=st.lists(
-            st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(
-                lambda e: e[0] != e[1]
-            ),
+            st.tuples(st.integers(0, 12), st.integers(0, 12)),
             min_size=1,
             max_size=15,
         )
     )
     def check(edges):
         pairs = spark.createDataFrame(
-            [(min(a, b), max(a, b)) for a, b in edges], ["doc_a", "doc_b"]
+            [(min(a, b), max(a, b)) for a, b in edges]
+            + [(None, 3), (None, None)],
+            "doc_a long, doc_b long",
         )
-        got = {
-            r["doc_id"]: r["component_id"]
-            for r in dedup.connected_components(pairs).collect()
-        }
-        assert got == union_find(edges)
+        expect = union_find(edges)
+        for kw in ({"local_max_edges": 0}, {}):
+            got = {
+                r["doc_id"]: r["component_id"]
+                for r in dedup.connected_components(pairs, **kw).collect()
+            }
+            assert got == expect, kw
 
     check()
 
@@ -1026,10 +1032,10 @@ def test_minhash_sketch_is_shuffle_free(spark, tables):
 
 
 def test_connected_components_long_chain_converges(spark):
-    """Pointer-doubling: a 200-node path graph (diameter 200) must
-    converge within the default 20 iterations (log2(200) ~ 8 with the
-    shortcut join; one-hop-only propagation would need 200 rounds and
-    previously returned silently-wrong split labels)."""
+    """A 200-node path graph (diameter 200) must converge within the
+    default round budget on the distributed path: star contraction
+    needs O(log^2 n) rounds whatever the diameter, where one-hop label
+    propagation would need 200."""
     from ecom_etl_proj_spark.operators import dedup
 
     n = 200
@@ -1042,12 +1048,10 @@ def test_connected_components_long_chain_converges(spark):
     assert {r["component_id"] for r in rows} == {0}
 
 
-# A 24-node sparse graph whose min-label basins force the engine's
-# hop + full-path-compression loop through 8 label-changing rounds
-# (found by exhaustive simulation of the algorithm; a plain PATH now
-# converges in ONE round because the compression inner loop collapses
-# monotone pointer chains — the r15 upgrade the old path-64 boundary
-# tests predated).
+# A 24-node sparse graph with several min-id basins: star contraction
+# needs 4 edge-set-changing rounds on it (it raises at
+# max_iterations=3), so the round-budget tests below have a multi-round
+# boundary to pin.
 _CC_MULTI_ROUND_EDGES = [
     (0, 18), (1, 4), (1, 23), (2, 21), (3, 6), (3, 20), (4, 22),
     (5, 22), (6, 14), (6, 16), (6, 17), (7, 12), (7, 20), (8, 16),
@@ -1069,7 +1073,7 @@ def test_connected_components_raises_on_nonconvergence(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components(
-            pairs, max_iterations=1, algorithm="label", local_max_edges=0
+            pairs, max_iterations=1, local_max_edges=0
         )
 
 
@@ -1571,7 +1575,7 @@ def test_top_event_paths_sequences(spark):
 
 
 def test_connected_components_converges_at_exact_budget(spark):
-    """max_iterations counts label-CHANGING rounds: a run whose final
+    """max_iterations counts edge-set-CHANGING rounds: a run whose final
     permitted round reaches the fixpoint CONFIRMS instead of raising
     (r5 ADVICE boundary — confirming costs one extra no-change pass,
     never an extra allowed round). So the minimal sufficient budget k
@@ -1587,8 +1591,7 @@ def test_connected_components_converges_at_exact_budget(spark):
     for cand in range(1, 12):
         try:
             rows = dedup.connected_components(
-                pairs, max_iterations=cand, algorithm="label",
-                local_max_edges=0,
+                pairs, max_iterations=cand, local_max_edges=0
             ).collect()
             k = cand
             break
@@ -1599,8 +1602,7 @@ def test_connected_components_converges_at_exact_budget(spark):
     assert {r["component_id"] for r in rows} == {0}
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components(
-            pairs, max_iterations=k - 1, algorithm="label",
-            local_max_edges=0,
+            pairs, max_iterations=k - 1, local_max_edges=0
         )
 
 
@@ -4467,14 +4469,14 @@ def test_ccnet_buckets_approx_production_path(spark):
 
 def test_connected_components_stats_stay_bounded(spark):
     """Regression pin for the r15 planning-cost bomb: a checkpointed
-    DataFrame used to carry its pre-checkpoint plan's sizeInBytes, the
-    stats visitor multiplies children at joins, and the loop
-    self-joins the label table — so the carried estimate SQUARED per
-    round (digit count doubled; by round ~10 the driver spent minutes
-    per round in BigInteger multiplication inside join planning).
-    connected_components now rebuilds each round's frame around its
-    materialized RDD, so the final plan's size estimate stays a normal
-    number, not a ~2^rounds-digit monster."""
+    DataFrame used to carry its pre-checkpoint plan's sizeInBytes and
+    the stats visitor multiplies children at joins, so a round loop
+    that self-joins its checkpointed state SQUARED the carried estimate
+    per round (digit count doubled; by round ~10 the driver spent
+    minutes per round in BigInteger multiplication inside join
+    planning). connected_components rebuilds each round's frame around
+    its materialized RDD (``_reset_stats``), so the final plan's size
+    estimate stays a normal number, not a ~2^rounds-digit monster."""
     from ecom_etl_proj_spark.operators import dedup
 
     pairs = spark.createDataFrame(
@@ -4484,7 +4486,8 @@ def test_connected_components_stats_stay_bounded(spark):
     digits = len(
         str(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     )
-    # 8 label-changing rounds: the unfixed loop reaches ~3500 digits
+    # 4 changing star rounds plus the confirming one; a reset estimate
+    # is ~20 digits
     assert digits < 40, f"stats estimate has {digits} digits"
 
 
@@ -4636,65 +4639,14 @@ def test_knn_graph_recall_honest_frontier_pinned(tables):
     }, capped
 
 
-def test_connected_components_star_label_equivalence(spark):
-    """The two CC algorithms must produce IDENTICAL (doc_id,
-    component_id) sets on every graph shape: path (label's old worst
-    case), multiple components, the multi-basin graph, and a random
-    sparse graph. Star contraction is the r15 default; label stays
-    selectable, so divergence would silently split clusters for
-    whichever path a caller picks."""
-    import random
-
-    from ecom_etl_proj_spark.operators import dedup
-
-    graphs = {
-        "path": [(i, i + 1) for i in range(40)],
-        "two_comps": [(0, 1), (2, 3), (4, 5), (1, 2)],
-        "multi_basin": _CC_MULTI_ROUND_EDGES,
-        # one rng drawing both endpoints (r15 ADVICE: a fresh
-        # Random(3) per element made the first endpoint a constant,
-        # degenerating this case to a star graph)
-        "random": sorted(
-            {
-                (min(a, b), max(a, b))
-                for a, b in (
-                    (_rng.randrange(120), _rng.randrange(120))
-                    for _rng in [random.Random(3)]
-                    for _ in range(160)
-                )
-                if a != b
-            }
-        ),
-        # self-loop contract (r16): a node appearing ONLY as a
-        # self-pair is a singleton component in BOTH algorithms
-        "self_loops": [(0, 1), (7, 7), (3, 3), (1, 3)],
-    }
-    for name, rows in graphs.items():
-        pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
-        star = {
-            (r["doc_id"], r["component_id"])
-            for r in dedup.connected_components(
-                pairs, algorithm="star", local_max_edges=0
-            ).collect()
-        }
-        label = {
-            (r["doc_id"], r["component_id"])
-            for r in dedup.connected_components(
-                pairs, algorithm="label", local_max_edges=0
-            ).collect()
-        }
-        assert star == label, (name, sorted(star ^ label)[:6])
-
-
 def test_connected_components_local_gate_equivalence(spark):
     """The r16 size-gated driver union-find (``local_max_edges``) must
-    return EXACTLY the distributed algorithms' labels on every graph
-    shape — including self-pair-only singletons — and the gate must
-    flip on the exact deduped-edge count: at the threshold the local
-    path runs, one below it the distributed loop runs, both identical.
-    (The default threshold comes from $SPARK_GRAFT_CC_LOCAL_MAX_EDGES;
-    the local path is broadcast-class driver state, so equivalence is
-    the whole contract.)"""
+    return EXACTLY the star contraction's labels on every graph shape
+    — including self-pair-only singletons — and the gate must flip on
+    the exact deduped-edge count: at the threshold the local path
+    runs, one below it the distributed loop runs, both identical.
+    (The local path is broadcast-class driver state, so equivalence
+    is the whole contract.)"""
     import random
 
     from pyspark.sql import functions as F
@@ -4729,7 +4681,7 @@ def test_connected_components_local_gate_equivalence(spark):
         star = {
             (r["doc_id"], r["component_id"])
             for r in dedup.connected_components(
-                pairs, algorithm="star", local_max_edges=0
+                pairs, local_max_edges=0
             ).collect()
         }
         assert local == star, (name, sorted(local ^ star)[:6])
@@ -4822,20 +4774,34 @@ def test_connected_components_local_gate_drops_null_ids(spark):
     star = {
         (r["doc_id"], r["component_id"])
         for r in dedup.connected_components(
-            pairs, algorithm="star", local_max_edges=0
+            pairs, local_max_edges=0
         ).collect()
     }
     assert local == star == {(0, 0), (1, 0), (2, 0), (3, 3)}
 
 
-def test_connected_components_rejects_unknown_algorithm(spark):
-    import pytest
-
+def test_connected_components_job_budget(spark):
+    """The driver-side gate's job budget: on a bounded graph (the
+    multi-basin graph plus one self-pair) connected_components and one
+    collect of its result run at most 4 Spark jobs — the pair
+    checkpoint, the gate's single LIMIT-capped collect, and the result
+    collect over the driver-built frame. This is the path every
+    in-bound caller (curated_pack, dedup_clusters) takes; one extra
+    action per call would show up here."""
     from ecom_etl_proj_spark.operators import dedup
 
-    pairs = spark.createDataFrame([(0, 1)], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="unknown connected-components"):
-        dedup.connected_components(pairs, algorithm="hash2min")
+    pairs = spark.createDataFrame(
+        _CC_MULTI_ROUND_EDGES + [(30, 30)], "doc_a long, doc_b long"
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("cc_job_budget", "connected_components via the gate")
+    rows = dedup.connected_components(pairs).collect()
+    jobs = list(tracker.getJobIdsForGroup("cc_job_budget"))
+    assert len(jobs) <= 4, jobs
+    got = {(r["doc_id"], r["component_id"]) for r in rows}
+    nodes = {n for e in _CC_MULTI_ROUND_EDGES for n in e}
+    assert got == {(n, 0) for n in nodes} | {(30, 30)}
 
 
 def test_classifier_fused_step_stats_match_recount(spark):
