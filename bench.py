@@ -468,7 +468,7 @@ def main() -> None:
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     # SERIES BREAK (r10), cold series only: get_spark now primes the
     # JVM's interpreted-HOF and decimal-aggregate JIT once per process
-    # on tiny SYNTHETIC data (session.py::_engine_warmup) before any
+    # on tiny SYNTHETIC data (the former session._engine_warmup) before any
     # timed pass — so from r10 the cold numbers measure "first query on
     # a started engine" (what a long-lived cluster's first query pays)
     # instead of "first query carrying the whole JVM's one-time eval-
@@ -480,6 +480,11 @@ def main() -> None:
     # Cold totals r10+ are therefore not comparable to r1-r9 cold;
     # the warm series (unchanged semantics) remains the
     # round-over-round comparator, as it has been since r2's note.
+    # SECOND BREAK: the warm-up is gone again (get_spark runs no Spark
+    # job; the batch ETL and the serving sink never ran the HOF family
+    # it primed), so cold numbers once more include the fresh JVM's
+    # first-run JIT, and engine_warmup_sec stays as a key that reads
+    # 0.0.
     spark = get_spark("bench")
     tables = load_tables(spark, sf_dir, register=False)
     # Warm the JVM + file listing once so per-query numbers measure the
@@ -767,8 +772,8 @@ def main() -> None:
                 ),
                 "loadavg": [round(x, 2) for x in loadavg],
                 # one-time per-process JIT priming paid at session
-                # creation, before any timed pass (r10 series break —
-                # see the comment at the top of main())
+                # creation; 0.0 since session start primes nothing
+                # (series breaks: see the comment at the top of main())
                 "engine_warmup_sec": _session_mod.WARMUP_SEC,
                 "calibration_sec": calibration,
                 "calibration_ref": CALIBRATION_REF,

@@ -36,6 +36,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ecom_etl_proj_spark import catalog
 from ecom_etl_proj_spark.operators import cleaning
@@ -90,20 +91,50 @@ def fused_table_counts(frames: dict[str, DataFrame]) -> dict[str, int]:
     )
 
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_back(
+    spark: SparkSession, path: str, empty_schema: StructType | str | None = None
+) -> DataFrame:
+    """A table this pipeline wrote, read with the exact schema Spark
+    stored in its file footers (key ``org.apache.spark.sql.parquet.
+    row.metadata``), so plan building runs no schema-inference job;
+    partition discovery still appends partition columns. A zero-row
+    partitioned write leaves no data file, only ``_SUCCESS``: such a
+    table reads as zero rows of ``empty_schema``. A path off the local
+    file system falls back to Spark's own inference."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+
+    part = next(
+        glob.iglob(
+            os.path.join(glob.escape(path), "**", "part-*.parquet"), recursive=True
+        ),
+        None,
+    )
+    if part is not None:
+        meta = pq.read_schema(part).metadata
+        schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    elif os.path.isdir(path):
+        schema = empty_schema
+    else:  # not a local directory (a remote lake): Spark infers
+        schema = None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def _fused_counts(
     spark: SparkSession, out_dir: str, layer: str, frames: dict[str, DataFrame]
 ) -> dict[str, int]:
     """Post-load counts over the tables as WRITTEN (the read-back also
     validates what actually landed; row-group metadata keeps the scan
-    cheap). Each table is read back with the schema of the frame that
-    was just written, so plan building infers no schema (a footer-
-    reading job per table) — the one fused action is the counting
-    itself."""
+    cheap): one fused action, no schema-inference job."""
     return fused_table_counts(
         {
-            name: spark.read.schema(df.schema).parquet(
-                os.path.join(out_dir, layer, name)
-            )
+            name: read_back(spark, os.path.join(out_dir, layer, name), df.schema)
             for name, df in frames.items()
         }
     )
@@ -199,7 +230,7 @@ def stg_lineitem(t: dict[str, DataFrame]) -> DataFrame:
 def run_stg(spark: SparkSession, out_dir: str) -> dict[str, int]:
     """Build staging tables from the materialized ODS layer."""
     t = {
-        name: spark.read.parquet(os.path.join(out_dir, "ods", name))
+        name: read_back(spark, os.path.join(out_dir, "ods", name))
         for name in ODS_TABLES
     }
     stg = {
@@ -234,7 +265,7 @@ DWH_NOT_NULL = {
 def run_dwh(spark: SparkSession, out_dir: str, snapshot_date: str) -> dict[str, int]:
     """Star-schema load: dims first, then the fact, all audit-stamped."""
     stg = {
-        name: spark.read.parquet(os.path.join(out_dir, "stg", name))
+        name: read_back(spark, os.path.join(out_dir, "stg", name))
         for name in ("customer", "part", "orders", "lineitem", "supplier", "nation", "region")
     }
     dim_geo = (
@@ -334,11 +365,16 @@ def fused_not_null_counts(
 
 def validate_dwh(spark: SparkSession, out_dir: str) -> dict[str, int]:
     """NOT NULL checks on every declared key column, fused into one
-    job for the whole layer (see fused_not_null_counts)."""
+    job for the whole layer (see fused_not_null_counts). A table with
+    no data file (an empty ``fact_sales``) has 0 violations."""
     return fused_not_null_counts(
         {
-            table: spark.read.parquet(os.path.join(out_dir, "dwh", table))
-            for table in DWH_NOT_NULL
+            table: read_back(
+                spark,
+                os.path.join(out_dir, "dwh", table),
+                ", ".join(f"{c} string" for c in cols),
+            )
+            for table, cols in DWH_NOT_NULL.items()
         },
         DWH_NOT_NULL,
     )

@@ -5855,7 +5855,8 @@ register(
 # vec_id), non-representatives dropped before packing. The oracle is
 # the curated_pack oracle with the mutual_knn_clusters recursive-CTE
 # chain spliced in front of `final` (DuckDB allows several recursive
-# CTEs in one WITH RECURSIVE). min_cosine pins to 0.3 here: the
+# CTEs in one WITH RECURSIVE; `semedges` is MATERIALIZED for the same
+# reason as there). min_cosine pins to 0.3 here: the
 # synthetic embeddings are near-orthogonal (kNN cosines 0.08-0.49,
 # median 0.25), so a SemDeDup-grade 0.9+ floor is a no-op on this
 # corpus and 0.0 keeps every mutual edge (drops 402 of 500 docs);
@@ -5920,7 +5921,7 @@ _SEM_LOSER_CTES = f"""semcent AS (
                     AND a.neighbor_id = b.vec_id
         WHERE a.vec_id < a.neighbor_id
     ),
-    semedges AS (
+    semedges AS MATERIALIZED (
         SELECT id_a AS src, id_b AS dst FROM semmut
         UNION
         SELECT id_b AS src, id_a AS dst FROM semmut
@@ -6498,7 +6499,10 @@ register(
 
 # SemDeDup-style clusters over the MUTUAL kNN graph (r12): edges only
 # where both endpoints list each other in their top-3; recursive-CTE
-# closure mirrors the engine's min-id connected components.
+# closure mirrors the engine's min-id connected components. `edges` is
+# MATERIALIZED: inlined, DuckDB re-derives the whole kNN graph on every
+# closure iteration (~50 s vs ~1 s at sf0.001 on a 4-core box, same
+# rows).
 register(
     "mutual_knn_clusters",
     lambda t: similarity.mutual_knn_clusters(t),
@@ -6512,7 +6516,7 @@ register(
                  AND a.neighbor_id = b.vec_id
         WHERE a.vec_id < a.neighbor_id
     ),
-    edges AS (
+    edges AS MATERIALIZED (
         SELECT id_a AS src, id_b AS dst FROM mut
         UNION
         SELECT id_b AS src, id_a AS dst FROM mut

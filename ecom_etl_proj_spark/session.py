@@ -9,6 +9,10 @@ code lands well on a 1000-executor cluster:
   env-overridable; at cluster scale AQE coalesces from a high initial
   number, so the initial value should be ~2-3x total cores there.
 - Arrow enabled for the few Pandas-UDF paths (vector ops, multimodal).
+
+Building the session runs no Spark job: the batch ETL and the serving
+sink start as fresh jobs, so the JVM's first-run JIT lands in the first
+query that needs it, like on any newly started cluster.
 """
 
 from __future__ import annotations
@@ -19,7 +23,8 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "ecom-etl-proj-spark") -> SparkSession:
-    """Build (or reuse) a SparkSession tuned for this engine."""
+    """Build (or reuse) a SparkSession tuned for this engine; runs no
+    Spark job."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     shuffle_parts = os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus)
     builder = (
@@ -43,103 +48,10 @@ def get_spark(app_name: str = "ecom-etl-proj-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    spark = builder.getOrCreate()
-    if os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
-        # Warmup is an optimization, never a correctness dependency: if
-        # the priming queries fail (constrained driver memory, exotic
-        # configs), degrade to an unprimed session rather than making
-        # session acquisition itself raise.
-        try:
-            _engine_warmup(spark)
-        except Exception as exc:  # pragma: no cover - defensive
-            import logging
-
-            logging.getLogger(__name__).debug(
-                "engine warmup failed; continuing unprimed: %s", exc
-            )
-    return spark
+    return builder.getOrCreate()
 
 
-# get_spark's one-time JIT priming: wall-seconds it cost this process
-# (0.0 until it runs; bench.py reports it as engine_warmup_sec).
+# Seconds session start spent priming the engine, read by bench.py
+# (engine_warmup_sec) and perfbench (warmup_s). get_spark primes
+# nothing, so it stays 0.0.
 WARMUP_SEC: float = 0.0
-_WARMED: set[int] = set()
-
-
-def _engine_warmup(spark: SparkSession) -> None:
-    """Prime the JVM's hot execution paths ONCE per process, at session
-    creation, on tiny synthetic data (never the data under test).
-
-    Motivation (measured, r8-r10): the first execution of the
-    higher-order-function expression family (transform / filter /
-    array_sort lambdas — the minhash sketch, text quality, repetition
-    signals) pays ~3-5s of one-time interpreted-eval JIT in a fresh
-    JVM; the decimal-sum aggregate family similarly pays a first-run
-    codegen+JIT cost. That cost is per-JVM, not per-query: on a
-    long-lived cluster every executor pays it exactly once at startup
-    and never again, yet through r9 it landed inside whichever query a
-    session happened to run first (3 rounds of 'cold-compile tax'
-    findings on pricing_summary / dedup_minhash_lsh). Priming at
-    session creation is the same move a production deployment makes
-    (run a canary batch before serving); it makes EVERY first query
-    faster, not just benched ones.
-
-    Scope: a 3-pass MinHash-LSH sketch over 1024 generated docs (the
-    densest HOF chain in the engine — transform/filter/index-lambda/
-    array_sort/struct arrays/concat_ws/xxhash64/md5), plus a
-    decimal(18,6) sum/avg aggregate over a small range (the exact
-    money-accumulation shape). ~4-6s once per process, skippable with
-    SPARK_GRAFT_WARMUP=0 (tests of session construction, ephemeral
-    tooling). bench.py documents the r10 series break this introduced
-    and reports the cost as engine_warmup_sec.
-    """
-    global WARMUP_SEC
-    if id(spark) in _WARMED:
-        return
-    _WARMED.add(id(spark))
-    import time
-
-    from pyspark.sql import functions as F
-
-    t0 = time.time()
-    from ecom_etl_proj_spark.operators import dedup
-
-    for k in range(3):
-        docs = spark.range(0, 1024, 1, 8).select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.sequence(
-                        F.lit(0), F.pmod(F.col("id") + k, F.lit(40)) + 20
-                    ),
-                    lambda i: F.conv(
-                        (F.col("id") * 131 + i * 7 + k).cast("string"),
-                        10,
-                        36,
-                    ),
-                ),
-            ).alias("text"),
-            F.lit("en").alias("lang"),
-            F.lit("w").alias("source"),
-            F.lit(100).alias("n_chars"),
-        )
-        dedup.dedup_minhash_lsh({"documents": docs}).count()
-    (
-        spark.range(0, 200_000, 1, 8)
-        .select(
-            F.pmod(F.col("id"), F.lit(7)).alias("g"),
-            (F.col("id") % 1000 / F.lit(100.0)).alias("x"),
-        )
-        .groupBy("g")
-        .agg(
-            F.round(F.sum(F.col("x").cast("decimal(18,6)")), 2).alias("s"),
-            F.round(
-                F.sum(F.col("x").cast("decimal(18,6)")).cast("double")
-                / F.count("x"),
-                2,
-            ).alias("a"),
-        )
-        .count()
-    )
-    WARMUP_SEC = round(time.time() - t0, 3)

@@ -37,8 +37,8 @@ AGGREGATES, never raw events. One GROUPING SETS aggregate over the
 micro-batch (partial aggregation map-side) yields every counter family
 and the totals; a single-level salted top-N yields the recent-N
 candidates, at most families x 32 x recent_n rows by construction. In
-driver mode ONE collect of their union answers the epoch (isEmpty plus
-that collect: at most 4 Spark jobs), so the driver handles |distinct
+driver mode ONE collect of their union answers the epoch (at most 3
+Spark jobs, no emptiness probe), so the driver handles |distinct
 keys in batch| + the recent bound — the same bounded-key contract the
 reference's Redis already imposes on the serving tier.  The heavy
 state (full per-product history) lives in the streaming aggregation /
@@ -867,7 +867,9 @@ def serve_consumer_metrics(
     - ``"driver"``: one atomic op batch per epoch, built from ONE
       collect — the GROUPING SETS aggregate unioned with the salted
       recent-N rows (see ``consumer_metric_ops``) — so an epoch costs
-      isEmpty plus that collect, at most 4 Spark jobs. Bounded by
+      that collect and no probe, at most 3 Spark jobs; an empty or
+      error-only batch collects no rows and records its applied-marker
+      with no ops. Bounded by
       distinct keys per batch plus families x 32 x recent_n recent
       rows; the dashboard-scale path.
     - ``"executor"`` (r11 judge item #5): the commutative counter
@@ -908,8 +910,6 @@ def serve_consumer_metrics(
     legacy_checked: list[bool] = []
 
     def process_driver(batch_df: DataFrame, epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
         ns = namespace()
         # One-time pre-r12 marker-namespace migration (r12 ADVICE #2):
         # only the FIRST epoch a run processes can be a restart replay,
@@ -963,9 +963,8 @@ def serve_consumer_metrics(
         # rows from above, so small batches (the dashboard tail) keep
         # the one-atomic-op driver path and large ones push from the
         # executors; deterministic in the batch content, so replays
-        # re-pick the same path and the markers hold
-        if batch_df.isEmpty():
-            return
+        # re-pick the same path and the markers hold. One count, and
+        # none without a store_url (the executor rung is unreachable)
         big = store_url is not None and (
             4 * batch_df.count() > auto_executor_keys
         )

@@ -14,10 +14,29 @@ from ecom_etl_proj_spark.pipelines import batch
 from tests.conftest import SF_DIR
 
 
+# Spark jobs each layer ran while the ``report`` fixture built its lake
+LAYER_JOBS: dict[str, int] = {}
+
+
 @pytest.fixture(scope="module")
 def report(spark, tmp_path_factory):
+    """The sf0.001 lake built by run_batch_etl, each layer's jobs run
+    in their own job group and counted into LAYER_JOBS."""
     out = str(tmp_path_factory.mktemp("lake"))
-    rep = batch.run_batch_etl(spark, SF_DIR, out)
+    sc = spark.sparkContext
+    with pytest.MonkeyPatch.context() as mp:
+        for layer in ("run_ods", "run_stg", "run_dwh", "validate_dwh"):
+
+            def grouped(*args, _run=getattr(batch, layer), _layer=layer):
+                sc.setJobGroup(f"report.{_layer}", _layer)
+                result = _run(*args)
+                LAYER_JOBS[_layer] = len(
+                    list(sc.statusTracker().getJobIdsForGroup(f"report.{_layer}"))
+                )
+                return result
+
+            mp.setattr(batch, layer, grouped)
+        rep = batch.run_batch_etl(spark, SF_DIR, out)
     return rep, out
 
 
@@ -589,6 +608,57 @@ def test_layer_validation_job_budget_under_aqe(report, spark):
     assert batch.fused_not_null_counts(empty, batch.DWH_NOT_NULL)[
         "dim_geo"
     ] == 0
+
+
+def test_layer_job_budget_under_aqe(report, spark):
+    """Under AQE (the session default) every layer reads its inputs
+    back with the schema stored in their footers (``batch.read_back``),
+    so no read runs Spark's schema-inference job: building the lake
+    took run_ods <= 16, run_stg <= 18, run_dwh <= 10 and validate_dwh
+    <= 3 jobs (one inference job per table read made STG/DWH/validate
+    25/17/8). The footer schemas equal the inferred ones on all 19
+    tables, partition column included."""
+    _, out = report
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    budget = {"run_ods": 16, "run_stg": 18, "run_dwh": 10, "validate_dwh": 3}
+    assert set(LAYER_JOBS) == set(budget)
+    for layer, most in budget.items():
+        assert 0 < LAYER_JOBS[layer] <= most, (layer, LAYER_JOBS[layer])
+
+    for layer, names in (
+        ("ods", batch.ODS_TABLES),
+        ("stg", batch.ODS_TABLES),
+        ("dwh", batch.DWH_NOT_NULL),
+    ):
+        for name in names:
+            path = os.path.join(out, layer, name)
+            assert (
+                batch.read_back(spark, path).schema
+                == spark.read.parquet(path).schema
+            ), (layer, name)
+
+
+def test_empty_fact_table_reports_zero(report, spark, tmp_path):
+    """A zero-row lineitem staging table loads a zero-row fact_sales,
+    partitioned by ship_month, which leaves no data file: the DWH
+    counts and validation must still report 0 rows and 0 NOT NULL
+    violations instead of failing to infer a schema."""
+    import shutil
+
+    _, out = report
+    lake = tmp_path / "lake"
+    shutil.copytree(
+        os.path.join(out, "stg"),
+        lake / "stg",
+        ignore=lambda d, names: ["lineitem"] if d.endswith("stg") else [],
+    )
+    spark.read.parquet(os.path.join(out, "stg", "lineitem")).limit(0).write.parquet(
+        str(lake / "stg" / "lineitem")
+    )
+
+    counts = batch.run_dwh(spark, str(lake), "2026-01-01")
+    assert counts["fact_sales"] == 0
+    assert batch.validate_dwh(spark, str(lake))["fact_sales"] == 0
 
 
 def test_concurrent_readers_never_see_torn_merge(spark, tmp_path):

@@ -7,6 +7,8 @@ products sneak in.
 
 from __future__ import annotations
 
+import pytest
+
 from ecom_etl_proj_spark.operators import analytics, similarity, star
 
 
@@ -14,6 +16,65 @@ def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+@pytest.fixture(scope="module", autouse=True)
+def plans_audit(request, tmp_path_factory):
+    """``tools/explain_audit.py --check``, started when this module
+    starts if test_plans_md_fresh is selected: it runs in its own
+    process and JVM (~2 min), so it overlaps the in-process plan tests
+    instead of adding to them. Its cwd is a fresh directory, so its
+    warehouse never shares table directories with this session's.
+    Calling the fixture value waits for the check and returns
+    (returncode, stdout, stderr)."""
+    import os
+    import subprocess
+    import sys as _sys
+
+    if not any(i.name == "test_plans_md_fresh" for i in request.session.items):
+        yield None
+        return
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    work = tmp_path_factory.mktemp("explain_audit")
+    with open(work / "out", "w+") as out, open(work / "err", "w+") as err:
+        proc = subprocess.Popen(
+            [_sys.executable, os.path.join(repo, "tools", "explain_audit.py"),
+             "--check"],
+            cwd=work, stdout=out, stderr=err,
+        )
+
+        def result():
+            proc.wait(timeout=900)
+            out.seek(0)
+            err.seek(0)
+            return proc.returncode, out.read(), err.read()
+
+        try:
+            yield result
+        finally:
+            if proc.poll() is None:
+                proc.kill()
+                proc.wait()
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark, tables):
+    """Every registered query built ONCE over sf0.001: name -> (its
+    formatted physical plan, its optimized logical plan). Building the
+    registry runs the eager state and model builds, so the registry-wide
+    sweeps share one build instead of paying it each."""
+    from ecom_etl_proj_spark.plans import registry
+
+    from tests.conftest import SF_DIR
+
+    plans = {}
+    for name, fn in registry.queries().items():
+        qe = fn(spark, SF_DIR)._jdf.queryExecution()
+        plans[name] = (
+            spark._jvm.PythonSQLUtils.explainString(qe, "formatted"),
+            qe.optimizedPlan().toString(),
+        )
+    return plans
 
 
 def test_pricing_summary_pushdown(tables):
@@ -228,7 +289,7 @@ def test_bucketed_join_no_exchange(spark, tables, tmp_path):
             shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
 
 
-def test_no_pathological_plans_registry_wide(spark, tables):
+def test_no_pathological_plans_registry_wide(registry_plans):
     """Global scale contract: NO registered query may plan a cartesian
     product or a row-at-a-time Python eval. Plans are built and checked
     without executing anything, so this sweeps all queries cheaply.
@@ -239,13 +300,7 @@ def test_no_pathological_plans_registry_wide(spark, tables):
     - ArrowEvalPython/mapInPandas for the multimodal decode path
       (vectorized Arrow transfer, never BatchEvalPython).
     """
-    from ecom_etl_proj_spark.plans import registry
-
-    for name, fn in registry.queries().items():
-        from tests.conftest import SF_DIR
-
-        df = fn(spark, SF_DIR)
-        plan = plan_of(df)
+    for name, (plan, _) in registry_plans.items():
         assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
         assert "BatchEvalPython" not in plan, f"{name} uses row-at-a-time Python"
 
@@ -407,7 +462,7 @@ def test_pack_sequences_sharded_window(spark, tables):
         by_shard[r["shard"]] = cum + r["n_tokens"]
 
 
-def test_no_unbounded_single_partition_windows_registry_wide(spark, tables):
+def test_no_unbounded_single_partition_windows_registry_wide(registry_plans):
     """Global scale contract #2: an UNPARTITIONED window funnels its
     whole input through one task, so it is only acceptable over inputs
     that are already bounded (an aggregate at a coarse grain, or a
@@ -436,10 +491,6 @@ def test_no_unbounded_single_partition_windows_registry_wide(spark, tables):
     """
     import re
 
-    from ecom_etl_proj_spark.plans import registry
-
-    from tests.conftest import SF_DIR
-
     bounded_ok = {
         "running_totals",
         "running_totals_scalable",
@@ -455,8 +506,7 @@ def test_no_unbounded_single_partition_windows_registry_wide(spark, tables):
         "key_skew_profile",
     }
     offenders = set()
-    for name, fn in registry.queries().items():
-        plan = fn(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+    for name, (_, plan) in registry_plans.items():
         for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
             first = m.group(1).split(",")[0]
             if " ASC" in first or " DESC" in first:
@@ -587,24 +637,15 @@ def test_dynamic_partition_pruning_fires(spark, tables, tmp_path):
     assert j.count() > 0
 
 
-def test_plans_md_fresh():
+def test_plans_md_fresh(plans_audit):
     """PLANS.md must match the plans HEAD actually produces (r8 gate:
     the audit went stale twice in r7 — a planner-affecting change now
     fails here until `python tools/explain_audit.py` is rerun).
     Subprocess: the audit builds its own session over sf0.001 and the
     comparison masks session-volatile ids (see tools/explain_audit.py).
     """
-    import os
-    import subprocess
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [_sys.executable, os.path.join(repo, "tools", "explain_audit.py"),
-         "--check"],
-        capture_output=True, text=True, timeout=900,
-    )
-    assert proc.returncode == 0, proc.stdout[-4000:] + proc.stderr[-2000:]
+    returncode, out, err = plans_audit()
+    assert returncode == 0, out[-4000:] + err[-2000:]
 
 
 def test_novelty_probe_bucketed_state_no_exchange(spark, tables):

@@ -40,12 +40,6 @@ def main() -> None:
     ) else "/root/testdata/sf0.1"
     no_codegen = "--no-codegen" in sys.argv
 
-    # This tool's purpose is attributing fresh-JVM FIRST-execution cost;
-    # get_spark's default _engine_warmup would pre-JIT the very HOF and
-    # decimal paths being measured and make t_exec1/gap under-report the
-    # compile tax. Force it off (explicit env still wins).
-    os.environ.setdefault("SPARK_GRAFT_WARMUP", "0")
-
     from ecom_etl_proj_spark.plans import registry
     from ecom_etl_proj_spark.session import get_spark
 
