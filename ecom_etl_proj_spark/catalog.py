@@ -6,22 +6,23 @@ We keep that contract idea: each table has a declared schema, loads are
 validated against it, and readers select only declared columns so column
 pruning reaches the parquet scan.
 
-Scale notes (100 TB): parquet scans here are plain ``spark.read.parquet``
-so Catalyst handles predicate pushdown / column pruning / partition
-pruning for free. On a real lake the fact tables (orders, lineitem,
-events) would be written partitioned by date (see ``write_partitioned``)
-and bucketed by join key to make the fact-fact join shuffle-free.
+Every parquet read in the package goes through ``read_parquet``: the
+schema comes from a file footer, so opening a table runs no Spark job
+(Spark's own inference runs one per table), and the scan is a plain
+parquet scan, so Catalyst still handles predicate pushdown / column
+pruning / partition pruning. On a real lake the fact tables (orders,
+lineitem, events) would be written partitioned by date and bucketed by
+join key to make the fact-fact join shuffle-free.
 """
 
 from __future__ import annotations
 
-import logging
+import json
 import os
 import weakref
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
@@ -186,18 +187,6 @@ SCHEMAS: dict[str, T.StructType] = {
 }
 
 
-def _enable_nanos_read(spark: SparkSession) -> None:
-    """The testdata parquet stores TIMESTAMP(NANOS); Spark needs this
-    legacy flag to accept it (runtime-settable, so it also works under a
-    driver-owned SparkSession)."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception as exc:  # pragma: no cover - static conf builds
-        logging.getLogger(__name__).debug(
-            "nanosAsLong not settable at runtime: %s", exc
-        )
-
-
 # Row-count hints read from parquet FOOTERS at load time (metadata
 # only, no Spark job), keyed weakly on the DataFrame handle. Operators
 # that auto-scale parameters from the corpus size (similarity's ANN
@@ -214,14 +203,11 @@ def _tree_mtime(path: str) -> float:
     """Newest mtime across the path, its symlink (a generation swap
     renames a fresh link into place), and every non-system DIRECTORY
     under it — the cache key component that invalidates footer memos
-    after an append/copy_into/compaction touches the table (r11
-    ADVICE #2: a bare path-keyed lru_cache served stale counts after
-    appends). Directory mtimes suffice: every writer here CREATES,
-    renames, or deletes files — which bumps the containing dir's
-    mtime — or swaps the generation pointer; nothing rewrites a data
-    file in place (immutable-generation discipline). Statting dirs
-    only keeps a repeat load_table at O(dirs) driver work instead of
-    the r12 per-file walk's O(files) (r12 ADVICE #5)."""
+    after an append/copy_into/compaction touches the table. Directory
+    mtimes suffice: every writer here creates, renames or deletes
+    files, or swaps the generation pointer; nothing rewrites a data
+    file in place. Statting dirs only keeps a repeat load_table at
+    O(dirs) driver work."""
     try:
         newest = os.lstat(path).st_mtime
         newest = max(newest, os.stat(path).st_mtime)
@@ -237,44 +223,45 @@ def _tree_mtime(path: str) -> float:
         return -1.0
 
 
+def _hidden(name: str) -> bool:
+    """Names Spark's file index skips (``_SUCCESS``, ``.crc`` files, the
+    ``_load_history`` ledger), partition directories excepted."""
+    return (name.startswith("_") and "=" not in name) or name.startswith(".")
+
+
+def _data_files(path: str):
+    """The data files Spark lists for a local parquet path, sorted: the
+    path itself for a file, else every file under the directory outside
+    hidden names; nothing for a path off the local file system."""
+    if os.path.isfile(path):
+        yield path
+        return
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        yield from (os.path.join(root, f) for f in sorted(files) if not _hidden(f))
+
+
 @lru_cache(maxsize=256)
 def _footer_rows_at(path: str, mtime: float) -> int | None:
+    """Total row count from parquet footer metadata (mtime-keyed so
+    appends invalidate the memo). No data file is unknown, NOT zero: a
+    0 hint would make auto-scaled params (n_centroids etc.) diverge
+    from the oracle's live count(*)."""
     del mtime  # cache-key component only
     try:
         import pyarrow.parquet as pq
 
-        if os.path.isfile(path):
-            return pq.ParquetFile(path).metadata.num_rows
-        total = 0
-        seen = False
-        for root, dirs, files in os.walk(path):
-            # match Spark's InMemoryFileIndex visibility rules: '_'/'.'
-            # prefixed paths (e.g. the copy_into _load_history ledger
-            # inside a table generation) are NOT data and must not
-            # inflate the hint above the live count(*)
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for f in files:
-                if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                    seen = True
-                    total += pq.ParquetFile(
-                        os.path.join(root, f)
-                    ).metadata.num_rows
-        # No parquet anywhere under the dir: unknown, NOT zero — a 0
-        # hint would make auto-scaled params (n_centroids etc.) diverge
-        # from the oracle's live count(*).
-        return total if seen else None
+        files = list(_data_files(path))
+        return sum(pq.read_metadata(f).num_rows for f in files) if files else None
     except Exception:  # pragma: no cover - remote/odd layouts
         return None
 
 
-def _footer_rows(path: str) -> int | None:
-    """Total row count from parquet footer metadata (file or dir;
-    recursive, mtime-keyed so appends invalidate the memo)."""
-    return _footer_rows_at(path, _tree_mtime(path))
-
-
 @lru_cache(maxsize=256)
 def _few_splits_at(path: str, mtime: float) -> bool:
+    """True if the parquet path can't parallelize a scan (fewer than 8
+    row groups / files). Checked from file metadata (milliseconds,
+    mtime-keyed cache) — never by resolving the Spark plan."""
     del mtime  # cache-key component only
     try:
         import pyarrow.parquet as pq
@@ -287,38 +274,113 @@ def _few_splits_at(path: str, mtime: float) -> bool:
         return False
 
 
-def _few_splits(path: str) -> bool:
-    """True if the parquet path can't parallelize a scan (fewer than 8
-    row groups / files). Checked from file metadata (milliseconds,
-    mtime-keyed cache) — never by resolving the Spark plan."""
-    return _few_splits_at(path, _tree_mtime(path))
+# Spark's parquet inference type for the Arrow column types this
+# package's inputs use; any other type falls back to Spark's inference.
+_ARROW_TYPES: dict[str, T.DataType] = {
+    "bool": T.BooleanType(),
+    "int8": T.ByteType(),
+    "int16": T.ShortType(),
+    "int32": T.IntegerType(),
+    "int64": T.LongType(),
+    "float": T.FloatType(),
+    "double": T.DoubleType(),
+    "string": T.StringType(),
+    "large_string": T.StringType(),
+    "date32[day]": T.DateType(),
+}
+
+
+def _spark_type(t, naive_ts: T.DataType) -> T.DataType:
+    """The type Spark's parquet inference gives an Arrow column type:
+    TIMESTAMP(NANOS) is ``bigint`` (the only form Spark reads it in,
+    ``nanosAsLong``), a tz-naive timestamp is ``naive_ts``. Raises
+    KeyError for a type this does not map."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        if t.unit == "ns":
+            return T.LongType()
+        return T.TimestampType() if t.tz else naive_ts
+    if pa.types.is_list(t):
+        return T.ArrayType(_spark_type(t.value_type, naive_ts))
+    return _ARROW_TYPES[str(t)]
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's inference reads from the first data file's
+    footer: the schema a Spark writer stored, else the converted Arrow
+    schema. None for no local data file, a file that is no parquet, or
+    INT96 timestamps or another type ``_spark_type`` does not map."""
+    import pyarrow.parquet as pq
+
+    file = next(_data_files(path), None)
+    if file is None:
+        return None
+    try:
+        meta = pq.read_metadata(file)
+        stored = (meta.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+        if stored is not None:
+            return T.StructType.fromJson(json.loads(stored))
+        if any(c.physical_type == "INT96" for c in meta.schema):
+            return None
+        ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+        naive_ts = T.TimestampNTZType() if ntz == "true" else T.TimestampType()
+        return T.StructType(
+            [
+                T.StructField(f.name, _spark_type(f.type, naive_ts))
+                for f in meta.schema.to_arrow_schema()
+            ]
+        )
+    except Exception:  # unreadable footer or unmapped type: Spark infers
+        return None
+
+
+def read_parquet(
+    spark: SparkSession, path: str, empty_schema: T.StructType | str | None = None
+) -> DataFrame:
+    """Open a parquet file or table directory with the schema Spark
+    would infer, taken from a file footer (``_footer_schema``), so no
+    schema-inference job runs; partition discovery still appends
+    partition columns. A local directory with no data file (a zero-row
+    partitioned write leaves only ``_SUCCESS``) reads as zero rows of
+    ``empty_schema``. Anything ``_footer_schema`` cannot answer falls
+    back to Spark's own inference."""
+    schema = _footer_schema(spark, path)
+    if schema is None and os.path.isdir(path) and next(_data_files(path), None) is None:
+        schema = empty_schema
+    if schema is None:
+        # Spark infers TIMESTAMP(NANOS) only under this legacy flag (a
+        # runtime conf, so it also works in a driver-owned session)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table, projecting to its declared schema columns."""
+    """Load one table with ``read_parquet`` (no Spark job), projected
+    to its declared schema columns and types."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}")
-    _enable_nanos_read(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     # Explicit projection keeps the read schema pinned to the contract so
     # downstream column pruning is exact even if the files gain columns.
-    # Nano timestamps arrive as TIMESTAMP_NTZ; cast to the contract's
-    # TimestampType (session tz is UTC, so this is a pure reinterpret).
+    # The footer types pick each timestamp's conversion: TIMESTAMP(NANOS)
+    # reads as bigint nanos, floor-divided to micros (DuckDB's ns→us
+    # truncation); a tz-naive one reads as TIMESTAMP_NTZ (cast under the
+    # UTC session tz, a pure reinterpret). SQL strings: one py4j call per
+    # table instead of several per column.
+    actual = {f.name: f.dataType for f in _footer_schema(spark, path) or df.schema}
     cols = []
-    actual = dict(df.dtypes)
     for f in SCHEMAS[name].fields:
-        c = F.col(f.name)
+        c = f"`{f.name}`"
         if isinstance(f.dataType, T.TimestampType):
-            if actual.get(f.name) == "bigint":
-                # TIMESTAMP(NANOS) read as raw nanos under nanosAsLong:
-                # integer-divide to micros (floor, matching DuckDB's
-                # ns→us truncation) and rebuild the timestamp.
-                c = F.timestamp_micros(F.expr(f"{f.name} div 1000"))
-            elif actual.get(f.name) != "timestamp":
-                c = c.cast("timestamp")
-        cols.append(c.alias(f.name))
-    out = df.select(*cols)
+            if isinstance(actual.get(f.name), T.LongType):
+                c = f"timestamp_micros({c} div 1000)"
+            elif not isinstance(actual.get(f.name), T.TimestampType):
+                c = f"CAST({c} AS TIMESTAMP)"
+        cols.append(f"{c} AS `{f.name}`")
+    out = df.selectExpr(*cols)
     # one stat-walk serves both memo keys (the walk IS the key
     # computation, so each helper would otherwise repeat it)
     mt = _tree_mtime(path)
@@ -334,12 +396,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return out
 
 
-# Handle cache: loading all 10 tables costs ~1s of py4j round trips +
-# parquet footer reads, and every consumer (bench warmup, the registry's
-# tables_for, tools) was paying it separately — the first registry query
-# of a process was absorbing a full reload inside its own timed window
-# (misattributed as that query's "compile overhead" through r9).
-# DataFrames are immutable plan handles, so sharing is safe. Keyed by
+# Handle cache: every consumer (bench, the registry's tables_for, tools)
+# shares one set of handles per session and directory instead of paying
+# the py4j round trips and footer reads again. DataFrames are immutable
+# plan handles, so sharing is safe. Keyed by
 # session id + dir + register flag; the cached handles keep the session
 # reachable, which is fine for this engine's long-lived-session usage.
 _TABLES_CACHE: dict[tuple[int, str, bool], dict[str, DataFrame]] = {}
@@ -384,19 +444,13 @@ def load_tables(
     return out
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Write a fact table date-partitioned, the layout the reference's lake
-    uses (raw/<dataset>/<date>/file) re-expressed as hive-style partitions
-    so partition pruning works at 100 TB."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
 def validate_catalog(spark: SparkSession, sf_dir: str) -> dict[str, list[str]]:
     """Schema-contract validation: missing tables / missing columns /
     unexpected types per table (the reference's pre-dashboard
     check_tables_exist, streamlit/utils.py:64-105, and check.py).
 
-    Metadata-only: reads parquet footers, never data.
+    Metadata-only: each table opens through ``load_table``, which reads
+    a parquet footer and runs no Spark job.
     """
     problems: dict[str, list[str]] = {}
     for name in TABLES:

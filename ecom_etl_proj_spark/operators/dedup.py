@@ -954,11 +954,19 @@ def append_dedup_state(
     ``insertInto`` respects the tables' bucket spec, so appended rows
     land in the right buckets and the exchange-free probe property is
     preserved. Run AFTER probing the batch (a batch must not match
-    itself)."""
-    fps, bands, sets = _dedup_state_frames(new_docs, n, hash_mode)
-    fps.write.insertInto(f"{prefix}_fp")
-    bands.write.insertInto(f"{prefix}_bands")
-    sets.write.insertInto(f"{prefix}_sets")
+    itself). The batch's fingerprints and shingle sets are derived once
+    and cached: the first insert fills the cache, the other two read
+    it, so the batch is scanned once for the three tables."""
+    state = new_docs.select(
+        "doc_id", X.fingerprint().alias("fp"), X.word_shingles(n).alias("sh")
+    ).persist()
+    try:
+        sets = state.select("doc_id", "sh")
+        state.select("doc_id", "fp").write.insertInto(f"{prefix}_fp")
+        minhash_bands(sets, hash_mode).write.insertInto(f"{prefix}_bands")
+        sets.write.insertInto(f"{prefix}_sets")
+    finally:
+        state.unpersist()
 
 
 def probe_dedup_state(

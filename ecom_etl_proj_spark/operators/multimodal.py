@@ -72,13 +72,6 @@ def pil_available() -> bool:
         return False
 
 
-# Backwards-compatible alias: a real decode TIER always exists now
-# (the built-in uncompressed-BMP parser below), so mode='real' never
-# raises; what remains environmental is only the full-format PIL tier.
-def real_decoder_available() -> bool:
-    return True
-
-
 def _make_bmp_parser():
     """Factory for the pure-Python uncompressed-BMP header parser.
 

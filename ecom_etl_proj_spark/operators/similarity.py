@@ -1112,9 +1112,11 @@ def embedding_near_dup(
     once; interleaved A/B at sf0.1 (two rounds per arm, r17 retrofit):
     cold 9.18/8.87 -> 7.85/6.59 (~1.25x), warm flat (7.26/6.66 ->
     6.37/6.76), identical pair set. Consumers embedding_dedup_clusters /
-    curated_pack_semantic inherit.
+    curated_pack_semantic inherit. The checkpoint is lazy: the first
+    action fills it, so building the plan runs no Spark job (the bucket
+    frame is row-local, so no exchange runs at build time either).
     """
-    b = _multi_table_buckets(t, n_tables, bits).localCheckpoint()
+    b = _multi_table_buckets(t, n_tables, bits).localCheckpoint(eager=False)
     # unpivot to (vec_id, tbl, bucket) — one row per table per vector
     tbl_struct = ", ".join(
         f"named_struct('tbl', {i}, 'bucket', b{i})" for i in range(n_tables)
@@ -1183,19 +1185,6 @@ def embedding_dedup_clusters(
         "component_id",
         (F.col("doc_id") == F.col("component_id")).alias("is_representative"),
     )
-
-
-def ann_lsh_buckets(t: dict[str, DataFrame]) -> DataFrame:
-    """(vec_id, bucket) sign-bit LSH bucket assignment."""
-    planes = _hyperplanes()
-    emb = t["embeddings"]
-    bucket = None
-    for j, plane in enumerate(planes):
-        arr = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(V.dot(arr, "embedding") > 0, F.lit(1)).otherwise(F.lit(0))
-        term = F.shiftleft(bit.cast("long"), j)
-        bucket = term if bucket is None else bucket + term
-    return emb.select("vec_id", "embedding", bucket.alias("bucket"))
 
 
 def ann_params(

@@ -27,6 +27,10 @@ Scale notes (100 TB):
   key columns — both FUSED into one action per layer: one groupBy over
   the union of per-table row streams (a per-table job each through
   r10), over column-pruned scans of the written tables.
+- Every read, the raw input and each layer's read-back of what the
+  previous layer wrote, goes through ``catalog.read_parquet``: the
+  schema comes from the file footers, so no read runs Spark's
+  schema-inference job.
 """
 
 from __future__ import annotations
@@ -36,7 +40,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ecom_etl_proj_spark import catalog
 from ecom_etl_proj_spark.operators import cleaning
@@ -91,41 +94,6 @@ def fused_table_counts(frames: dict[str, DataFrame]) -> dict[str, int]:
     )
 
 
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def read_back(
-    spark: SparkSession, path: str, empty_schema: StructType | str | None = None
-) -> DataFrame:
-    """A table this pipeline wrote, read with the exact schema Spark
-    stored in its file footers (key ``org.apache.spark.sql.parquet.
-    row.metadata``), so plan building runs no schema-inference job;
-    partition discovery still appends partition columns. A zero-row
-    partitioned write leaves no data file, only ``_SUCCESS``: such a
-    table reads as zero rows of ``empty_schema``. A path off the local
-    file system falls back to Spark's own inference."""
-    import glob
-    import json
-
-    import pyarrow.parquet as pq
-
-    part = next(
-        glob.iglob(
-            os.path.join(glob.escape(path), "**", "part-*.parquet"), recursive=True
-        ),
-        None,
-    )
-    if part is not None:
-        meta = pq.read_schema(part).metadata
-        schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
-    elif os.path.isdir(path):
-        schema = empty_schema
-    else:  # not a local directory (a remote lake): Spark infers
-        schema = None
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
-
-
 def _fused_counts(
     spark: SparkSession, out_dir: str, layer: str, frames: dict[str, DataFrame]
 ) -> dict[str, int]:
@@ -134,7 +102,9 @@ def _fused_counts(
     cheap): one fused action, no schema-inference job."""
     return fused_table_counts(
         {
-            name: read_back(spark, os.path.join(out_dir, layer, name), df.schema)
+            name: catalog.read_parquet(
+                spark, os.path.join(out_dir, layer, name), df.schema
+            )
             for name, df in frames.items()
         }
     )
@@ -230,7 +200,7 @@ def stg_lineitem(t: dict[str, DataFrame]) -> DataFrame:
 def run_stg(spark: SparkSession, out_dir: str) -> dict[str, int]:
     """Build staging tables from the materialized ODS layer."""
     t = {
-        name: read_back(spark, os.path.join(out_dir, "ods", name))
+        name: catalog.read_parquet(spark, os.path.join(out_dir, "ods", name))
         for name in ODS_TABLES
     }
     stg = {
@@ -265,7 +235,7 @@ DWH_NOT_NULL = {
 def run_dwh(spark: SparkSession, out_dir: str, snapshot_date: str) -> dict[str, int]:
     """Star-schema load: dims first, then the fact, all audit-stamped."""
     stg = {
-        name: read_back(spark, os.path.join(out_dir, "stg", name))
+        name: catalog.read_parquet(spark, os.path.join(out_dir, "stg", name))
         for name in ("customer", "part", "orders", "lineitem", "supplier", "nation", "region")
     }
     dim_geo = (
@@ -369,7 +339,7 @@ def validate_dwh(spark: SparkSession, out_dir: str) -> dict[str, int]:
     no data file (an empty ``fact_sales``) has 0 violations."""
     return fused_not_null_counts(
         {
-            table: read_back(
+            table: catalog.read_parquet(
                 spark,
                 os.path.join(out_dir, "dwh", table),
                 ", ".join(f"{c} string" for c in cols),

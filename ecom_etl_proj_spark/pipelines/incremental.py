@@ -39,7 +39,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecom_etl_proj_spark import catalog
 from ecom_etl_proj_spark.operators.cleaning import snapshot_diff
+from ecom_etl_proj_spark.pipelines.swap import generation_swap, resolve_snapshot
 
 
 def lakehouse_formats(spark: SparkSession) -> list[str]:
@@ -123,9 +125,7 @@ def read_dimension(spark: SparkSession, dim_path: str) -> DataFrame:
     paths whose target changes mid-scan — exactly the torn read the
     concurrent-reader test would catch.) The lakehouse analog: Delta/
     Iceberg readers pin a snapshot's file list at query start."""
-    from ecom_etl_proj_spark.pipelines.swap import resolve_snapshot
-
-    return spark.read.parquet(resolve_snapshot(dim_path))
+    return catalog.read_parquet(spark, resolve_snapshot(dim_path))
 
 
 def apply_incremental(
@@ -150,8 +150,6 @@ def apply_incremental(
     see swap.py for the grace-period, migration and crash-recovery
     contract.
     """
-    from ecom_etl_proj_spark.pipelines.swap import generation_swap
-
     current = read_dimension(spark, dim_path)
     merged, diff = merge_dimension(
         current, incoming, keys, compare_cols, snapshot_date

@@ -13,8 +13,11 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ecom_etl_proj_spark import catalog
+from ecom_etl_proj_spark.pipelines.swap import generation_swap, resolve_snapshot
 
 
 def dir_stats(path: str) -> tuple[int, int]:
@@ -47,15 +50,10 @@ def compact(
     snapshots (``swap.read_generation``) — OPTIMIZE without losing
     VERSION AS OF history.
     """
-    from ecom_etl_proj_spark.pipelines.swap import (
-        generation_swap,
-        resolve_snapshot,
-    )
-
     snap = resolve_snapshot(path)
     before, total = dir_stats(snap)
     n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(snap)
+    df = catalog.read_parquet(spark, snap)
     generation_swap(
         path,
         lambda gen: df.repartition(n_out).write.mode("overwrite").parquet(gen),
@@ -89,12 +87,7 @@ def cluster_table(
     Same atomic generation-swap contract as ``compact``. Returns the
     number of data files written.
     """
-    from ecom_etl_proj_spark.pipelines.swap import (
-        generation_swap,
-        resolve_snapshot,
-    )
-
-    df = spark.read.parquet(resolve_snapshot(path))
+    df = catalog.read_parquet(spark, resolve_snapshot(path))
     generation_swap(
         path,
         lambda gen: (
@@ -134,13 +127,9 @@ def cluster_table_zorder(
     Same atomic generation-swap contract as ``compact``. Returns files
     written.
     """
-    from pyspark.sql import DataFrame
-
     if len(cols) != 2:
         raise ValueError("z-order here interleaves exactly two keys")
-    from ecom_etl_proj_spark.pipelines.swap import resolve_snapshot
-
-    df = spark.read.parquet(resolve_snapshot(path))
+    df = catalog.read_parquet(spark, resolve_snapshot(path))
     n_buckets = 1 << bits_per_dim
     qs = [i / n_buckets for i in range(1, n_buckets)]
     qarr = ", ".join(str(q) for q in qs)
@@ -173,8 +162,6 @@ def cluster_table_zorder(
         .sortWithinPartitions("__z")
         .drop("__z", *[f"__k_{c}" for c in cols], *[f"__b_{c}" for c in cols])
     )
-    from ecom_etl_proj_spark.pipelines.swap import generation_swap
-
     generation_swap(
         path, lambda gen: clustered.write.mode("overwrite").parquet(gen)
     )

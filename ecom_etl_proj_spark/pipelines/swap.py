@@ -37,6 +37,8 @@ import re
 import shutil
 from collections.abc import Callable
 
+from ecom_etl_proj_spark import catalog
+
 
 def resolve_snapshot(path: str) -> str:
     """Pin the current generation: resolve the pointer to the immutable
@@ -168,7 +170,7 @@ def read_generation(spark, path: str, generation: int):
             f"generation {generation} of {base} not retained "
             f"(on disk: {retained})"
         )
-    return spark.read.parquet(gen_dir)
+    return catalog.read_parquet(spark, gen_dir)
 
 
 def current_generation(path: str) -> int:

@@ -29,6 +29,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ecom_etl_proj_spark.catalog import (
+    FOREIGN_KEYS,
+    PRIMARY_KEYS,
+    SCHEMAS,
+    TABLES,
+    read_parquet,
+)
 from ecom_etl_proj_spark.operators import cleaning
 
 
@@ -125,12 +132,6 @@ def generate_ddl(
     hand-written, from the SAME key declarations the constraint-audit
     suite checks (catalog.PRIMARY_KEYS / FOREIGN_KEYS), so the DDL and
     the expectations can never drift."""
-    from ecom_etl_proj_spark.catalog import (
-        FOREIGN_KEYS,
-        PRIMARY_KEYS,
-        SCHEMAS,
-    )
-
     types = _SQL_TYPES[dialect]
     pk = PRIMARY_KEYS.get(table, [])
     cols = []
@@ -157,8 +158,6 @@ def generate_warehouse_ddl(
     """DDL for the whole catalog in FK-respecting creation order
     (parents before children — the reference loads/creates in exactly
     this dependency order, target_layer.py:36-154)."""
-    from ecom_etl_proj_spark.catalog import FOREIGN_KEYS, TABLES
-
     parents_of = {}
     for child, _, parent, _ in FOREIGN_KEYS:
         parents_of.setdefault(child, set()).add(parent)
@@ -234,8 +233,8 @@ def _raw_basename(col):
 def load_history(spark: SparkSession, table_path: str) -> DataFrame:
     """The COPY INTO ledger of a table: one row per loaded file
     (file_name, n_rows, loaded_at)."""
-    return spark.read.parquet(
-        os.path.join(table_path.rstrip("/"), _HISTORY_DIR)
+    return read_parquet(
+        spark, os.path.join(table_path.rstrip("/"), _HISTORY_DIR)
     )
 
 
@@ -244,8 +243,8 @@ def load_quarantine(spark: SparkSession, table_path: str) -> DataFrame:
     rows with their ``_error`` reason and ``_src_file`` stage file
     name (accumulates across loads; carried forward by the swap like
     the ledger)."""
-    return spark.read.parquet(
-        os.path.join(table_path.rstrip("/"), _QUARANTINE_DIR)
+    return read_parquet(
+        spark, os.path.join(table_path.rstrip("/"), _QUARANTINE_DIR)
     )
 
 
@@ -382,7 +381,7 @@ def copy_into(
         legacy_df = None
         if os.path.isdir(legacy_hist):
             try:
-                legacy_df = spark.read.parquet(legacy_hist)
+                legacy_df = read_parquet(spark, legacy_hist)
             except Exception:
                 legacy_df = None
         new_df = stage

@@ -223,14 +223,6 @@ def minutely_metrics(events: DataFrame, lateness: str = "10 minutes") -> DataFra
     )
 
 
-def user_counters(events: DataFrame) -> DataFrame:
-    """Running per-user activity counters (consumer.py:214-216)."""
-    return events.groupBy("user_id", "event_type").agg(
-        F.count("*").alias("num_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-
-
 def global_totals(events: DataFrame) -> DataFrame:
     """The consumer's metrics:totals hash (consumer.py:346-357)."""
     return events.groupBy("event_type").agg(

@@ -221,16 +221,6 @@ class RedisKVStore(KVStore):
         return self._r.get(key)
 
 
-def get_store() -> KVStore:
-    """The env-gated store factory: a real Redis when
-    ``$SPARK_GRAFT_REDIS_URL`` is set (and redis-py importable), else
-    a fresh embedded store."""
-    url = os.environ.get(REDIS_URL_ENV)
-    if url:
-        return RedisKVStore(url)
-    return EmbeddedKVStore()
-
-
 # --------------------------------------------------------------------------
 # Network-shared store: the executor-push seam without Redis
 # --------------------------------------------------------------------------

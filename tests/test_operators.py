@@ -566,10 +566,12 @@ def test_chunking_reconstruction_property(spark, tables):
 def test_connected_components_vs_union_find(spark):
     """Property (hypothesis): connected_components must agree with a
     plain union-find on random edge lists — self-pairs included, plus
-    a (NULL, x) and a (NULL, NULL) row — on both paths: the forced
-    distributed star contraction (``local_max_edges=0``) and the
-    default driver-side gate. A node seen only in self-pairs is its
-    own singleton component; NULL rows carry no connectivity."""
+    a (NULL, x) and a (NULL, NULL) row — on every path: the forced
+    distributed star contraction (``local_max_edges=0``), a small
+    non-zero gate (``local_max_edges=3``) that refuses most graphs and
+    hands them to the star contraction, and the default driver-side
+    gate. A node seen only in self-pairs is its own singleton
+    component; NULL rows carry no connectivity."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -610,7 +612,7 @@ def test_connected_components_vs_union_find(spark):
             "doc_a long, doc_b long",
         )
         expect = union_find(edges)
-        for kw in ({"local_max_edges": 0}, {}):
+        for kw in ({"local_max_edges": 0}, {"local_max_edges": 3}, {}):
             got = {
                 r["doc_id"]: r["component_id"]
                 for r in dedup.connected_components(pairs, **kw).collect()

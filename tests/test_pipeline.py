@@ -611,31 +611,98 @@ def test_layer_validation_job_budget_under_aqe(report, spark):
 
 
 def test_layer_job_budget_under_aqe(report, spark):
-    """Under AQE (the session default) every layer reads its inputs
-    back with the schema stored in their footers (``batch.read_back``),
-    so no read runs Spark's schema-inference job: building the lake
-    took run_ods <= 16, run_stg <= 18, run_dwh <= 10 and validate_dwh
-    <= 3 jobs (one inference job per table read made STG/DWH/validate
-    25/17/8). The footer schemas equal the inferred ones on all 19
-    tables, partition column included."""
-    _, out = report
+    """Under AQE (the session default) every layer opens its tables
+    with ``catalog.read_parquet``, which takes the schema from the file
+    footers, so no read runs Spark's schema-inference job: building the
+    lake took run_ods <= 9, run_stg <= 18, run_dwh <= 10 and
+    validate_dwh <= 3 jobs (one inference job per table read made them
+    16/25/17/8)."""
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    budget = {"run_ods": 16, "run_stg": 18, "run_dwh": 10, "validate_dwh": 3}
+    budget = {"run_ods": 9, "run_stg": 18, "run_dwh": 10, "validate_dwh": 3}
     assert set(LAYER_JOBS) == set(budget)
     for layer, most in budget.items():
         assert 0 < LAYER_JOBS[layer] <= most, (layer, LAYER_JOBS[layer])
 
+
+def test_read_parquet_runs_no_job_and_matches_inference(report, spark, tmp_path):
+    """Opening a table runs no Spark job, and the footer schema
+    ``catalog.read_parquet`` reads with equals the one Spark's own
+    inference gives:
+
+    - ``load_tables`` on a fresh directory (not in the handle cache) and
+      ``validate_catalog`` each run 0 jobs in their own job group. The
+      directory is sf0.001 with ``events.ts`` rewritten as
+      TIMESTAMP(NANOS), which ``load_table`` rebuilds to the same
+      timestamps;
+    - the schemas match on every table of sf0.001, sf0.01 and sf0.1,
+      on that nanos table, on a pyarrow file holding the converter's
+      other cases (nanosecond, tz-aware and tz-naive timestamps, bool,
+      int8, date32, lists), and on the written lake's ODS, STG and DWH
+      tables (``fact_sales``' ``ship_month`` partition column
+      included)."""
+    import shutil
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ecom_etl_proj_spark import catalog
+
+    fresh = tmp_path / "sf"
+    shutil.copytree(SF_DIR, fresh)
+    events = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    i = events.schema.get_field_index("ts")
+    (fresh / "events.parquet").unlink()
+    pq.write_table(
+        events.set_column(i, "ts", events["ts"].cast(pa.timestamp("ns"))),
+        fresh / "events.parquet",
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("catalog.load", "load_tables on a fresh directory")
+    loaded = catalog.load_tables(spark, str(fresh), register=False)
+    assert list(tracker.getJobIdsForGroup("catalog.load")) == []
+    sc.setJobGroup("catalog.validate", "validate_catalog")
+    assert catalog.validate_catalog(spark, str(fresh)) == {}
+    assert list(tracker.getJobIdsForGroup("catalog.validate")) == []
+    sc.setJobGroup("catalog.check", "check the loaded rows")
+    base = catalog.load_tables(spark, SF_DIR, register=False)
+    assert dict(loaded["events"].select("event_id", "ts").collect()) == dict(
+        base["events"].select("event_id", "ts").collect()
+    )
+
+    types = pa.table(
+        {
+            "ns": pa.array(np.array([1500, 2500], "datetime64[ns]")),
+            "ns_tz": pa.array([1500, 2500], pa.timestamp("ns", tz="UTC")),
+            "us": pa.array([1, 2], pa.timestamp("us")),
+            "ms_tz": pa.array([1, 2], pa.timestamp("ms", tz="UTC")),
+            "flag": pa.array([True, None]),
+            "i8": pa.array([1, 2], pa.int8()),
+            "day": pa.array([1, 2], pa.date32()),
+            "vec": pa.array([[1.0], [2.0, None]], pa.list_(pa.float32())),
+            "ts_list": pa.array([[1], []], pa.list_(pa.timestamp("us"))),
+        }
+    )
+    pq.write_table(types, tmp_path / "types.parquet")
+    _, lake = report
+    paths = [str(tmp_path / "types.parquet"), str(fresh / "events.parquet")]
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        sf_dir = os.path.join(os.path.dirname(SF_DIR), sf)
+        if os.path.isdir(sf_dir):
+            paths += [os.path.join(sf_dir, f"{t}.parquet") for t in catalog.TABLES]
     for layer, names in (
         ("ods", batch.ODS_TABLES),
         ("stg", batch.ODS_TABLES),
         ("dwh", batch.DWH_NOT_NULL),
     ):
-        for name in names:
-            path = os.path.join(out, layer, name)
-            assert (
-                batch.read_back(spark, path).schema
-                == spark.read.parquet(path).schema
-            ), (layer, name)
+        paths += [os.path.join(lake, layer, name) for name in names]
+    for path in paths:
+        assert catalog._footer_schema(spark, path) is not None, path
+        assert (
+            catalog.read_parquet(spark, path).schema
+            == spark.read.parquet(path).schema
+        ), path
 
 
 def test_empty_fact_table_reports_zero(report, spark, tmp_path):

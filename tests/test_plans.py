@@ -57,24 +57,78 @@ def plans_audit(request, tmp_path_factory):
                 proc.wait()
 
 
+# Spark jobs each registry entry ran while ``registry_plans`` built it
+REGISTRY_BUILD_JOBS: dict[str, int] = {}
+
+# The registry entries whose plan build runs Spark jobs over sf0.001
+# (iterative training loops, eager state tables and model builds), each
+# with the most jobs its build may run: the most measured in repeated
+# builds plus one, because AQE stage timing moves some counts by one job
+# (a connected-components build ran 8 or 9 jobs on the same input).
+# Every other entry builds with zero jobs (test_registry_build_job_budget).
+EAGER_BUILD_BUDGET = {
+    "knn_graph_state_recall": 45,
+    "ann_ivfpq_state": 14,
+    "ann_ivfpq_state_refined": 3,
+    "pq_recall_floor": 11,
+    "embedding_dedup_clusters": 7,
+    "dedup_clusters": 10,
+    "dedup_savings_report": 10,
+    "minhash_recall_audit": 14,
+    "quality_classifier_train": 33,
+    "quality_classifier_score": 26,
+    "ann_sq8_state": 12,
+    "copurchase_pagerank": 23,
+    "curated_pack_state": 17,
+    "incremental_dedup_state": 7,
+    "representative_selection": 10,
+    "bpe_tokenize": 45,
+    "semantic_dedup_state": 6,
+    "bpe_train_merges": 44,
+    "quality_classifier_eval": 58,
+    "quality_classifier_calibration": 70,
+    "mutual_knn_clusters": 13,
+    "curated_pack_semantic": 34,
+    "curated_pack": 20,
+}
+
+
 @pytest.fixture(scope="module")
 def registry_plans(spark, tables):
     """Every registered query built ONCE over sf0.001: name -> (its
     formatted physical plan, its optimized logical plan). Building the
     registry runs the eager state and model builds, so the registry-wide
-    sweeps share one build instead of paying it each."""
+    sweeps share one build instead of paying it each. Each entry builds
+    in its own job group; its job count goes into REGISTRY_BUILD_JOBS."""
     from ecom_etl_proj_spark.plans import registry
 
     from tests.conftest import SF_DIR
 
+    sc = spark.sparkContext
     plans = {}
     for name, fn in registry.queries().items():
+        sc.setJobGroup(f"registry_plans.{name}", name)
         qe = fn(spark, SF_DIR)._jdf.queryExecution()
         plans[name] = (
             spark._jvm.PythonSQLUtils.explainString(qe, "formatted"),
             qe.optimizedPlan().toString(),
         )
+        REGISTRY_BUILD_JOBS[name] = len(
+            list(sc.statusTracker().getJobIdsForGroup(f"registry_plans.{name}"))
+        )
     return plans
+
+
+def test_registry_build_job_budget(registry_plans):
+    """Building a registered plan runs no Spark job unless the entry is
+    in EAGER_BUILD_BUDGET, and a listed entry runs at most its budget."""
+    assert len(REGISTRY_BUILD_JOBS) == len(registry_plans)
+    over = {
+        name: jobs
+        for name, jobs in REGISTRY_BUILD_JOBS.items()
+        if jobs > EAGER_BUILD_BUDGET.get(name, 0)
+    }
+    assert over == {}
 
 
 def test_pricing_summary_pushdown(tables):
