@@ -74,14 +74,20 @@ from __future__ import annotations
 
 import hashlib
 import json
+import math
 import os
+import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from ecom_etl_proj_spark.catalog import load_tables  # noqa: E402
+from ecom_etl_proj_spark.operators import dedup, similarity, textops  # noqa: E402
 from ecom_etl_proj_spark.plans import registry  # noqa: E402
+from ecom_etl_proj_spark.plans.registry import tables_for  # noqa: E402
 from ecom_etl_proj_spark import session as _session_mod  # noqa: E402
 from ecom_etl_proj_spark.session import get_spark  # noqa: E402
 
@@ -174,42 +180,12 @@ def _llm_prod_queries():
     a production-path regression can't hide behind the oracle pin.
     pack_sequences/gopher_quality have no mode split; they're benched
     once in the registry series."""
-    from ecom_etl_proj_spark.operators import similarity, textops
-    from ecom_etl_proj_spark.plans.registry import tables_for
-
     return {
         "curated_pack_prod": lambda spark, sf_dir: textops.curated_pack(
             tables_for(spark, sf_dir), hash_mode="xxhash64"
         ),
         "ann_ivf_prod": lambda spark, sf_dir: similarity.ann_ivf(
             tables_for(spark, sf_dir), lloyd_iters=2
-        ),
-        # Additive r7 keys (existing series keep their exact semantics):
-        # the Arrow/BLAS vector-math variants. At bench scale (2k
-        # vectors) arrow's per-iteration driver collects make ann_ivf
-        # roughly break-even — its win is at corpus scale (14x measured
-        # at 100k x 316, growing with sqrt(n) centroids) — so it gets
-        # its own series instead of silently redefining ann_ivf_prod.
-        "ann_ivf_arrow": lambda spark, sf_dir: similarity.ann_ivf(
-            tables_for(spark, sf_dir), lloyd_iters=2, assign_impl="arrow"
-        ),
-        "embedding_knn_arrow": lambda spark, sf_dir: similarity.embedding_knn(
-            tables_for(spark, sf_dir), impl="arrow"
-        ),
-        # Additive r17 keys (r16 verdict item #3): Arrow/BLAS twins for
-        # the two remaining interpreted-HOF retrieval paths. Same
-        # series contract as ann_ivf_arrow — the oracle-pinned registry
-        # rows keep the expression form; these measure the production
-        # (recall-bound) implementations at the SAME seeded
-        # configuration as the retrieval ring's registry entries, so
-        # the ring number minus this number is the HOF-vs-BLAS delta.
-        "ann_ivfpq_arrow": lambda spark, sf_dir: similarity.ann_ivfpq(
-            tables_for(spark, sf_dir), assign_impl="arrow"
-        ),
-        "embedding_knn_classify_arrow": (
-            lambda spark, sf_dir: similarity.embedding_knn_classify(
-                tables_for(spark, sf_dir), impl="arrow"
-            )
         ),
         # Additive r8 key: the steady-state curation pack. The first
         # call per bench process drops + rebuilds the persisted
@@ -218,7 +194,7 @@ def _llm_prod_queries():
         # production pipeline actually pays per re-pack — joins over
         # persisted hashes and integers, zero text scans
         # (A/B-identical to curated_pack, tests/test_operators.py).
-        "curated_pack_state": _curated_pack_state_fn(),
+        "curated_pack_state": _state_fn("curated_pack_state"),
         # Additive r10 key: the steady-state ANN serving path. The
         # first call per bench process builds the persisted IVF index
         # in PRODUCTION mode (Lloyd-refined centroids — the build pays
@@ -229,7 +205,7 @@ def _llm_prod_queries():
         # tests/test_operators.py). This is the cost-shape fix for the
         # r9 finding that ann_ivf_prod re-ran index construction per
         # invocation.
-        "ann_ivf_state": _ann_ivf_state_fn(),
+        "ann_ivf_state": _state_fn("ann_ivf_state"),
         # Additive r12 key: the steady-state IVF-PQ ADC serving path.
         # First call per bench process builds the persisted index in
         # FULL production mode — Lloyd-refined centroids plus trained
@@ -239,14 +215,14 @@ def _llm_prod_queries():
         # row-local m-lookup fold over the bucketed code arrays, zero
         # corpus scans, zero raw-vector reads, zero training
         # (A/B-identical to ann_ivfpq per mode, tests/test_operators).
-        "ann_ivfpq_state": _ann_ivfpq_state_fn(),
+        "ann_ivfpq_state": _state_fn("ann_ivfpq_state"),
         # Additive r10 key: steady-state semantic incremental dedup —
         # an arriving batch screened against the persisted production
         # (Lloyd-refined) IVF index of the existing corpus. Build is
         # once per process (p0); warm passes measure the per-batch
         # screen a continuous-ingestion pipeline pays: broadcast probe
         # of the bucketed inverted file, zero corpus scans.
-        "semantic_dedup_state": _semantic_dedup_state_fn(),
+        "semantic_dedup_state": _state_fn("semantic_dedup_state"),
         # Additive r10 key: steady-state TEXT incremental dedup — the
         # registered incremental_dedup_state shape under bench-local
         # tables. Build sketches the corpus split once into the
@@ -255,7 +231,7 @@ def _llm_prod_queries():
         # batch-keyed joins, the state sort-merges in place, zero
         # corpus text scans (verdict-identical to incremental_dedup,
         # tests/test_operators.py).
-        "incremental_dedup_state": _incremental_dedup_state_fn(),
+        "incremental_dedup_state": _state_fn("incremental_dedup_state"),
         # Additive r13 key: the steady-state IVF-SQ8 serving path —
         # the scalar rung between the raw inverted file (ann_ivf_state)
         # and PQ ADC (ann_ivfpq_state). First call builds the
@@ -264,7 +240,7 @@ def _llm_prod_queries():
         # exact queries against row-locally DECODED codes, 1/4 the
         # inverted file's scan bytes, zero corpus scans, zero
         # raw-vector reads.
-        "ann_sq8_state": _ann_sq8_state_fn(),
+        "ann_sq8_state": _state_fn("ann_sq8_state"),
     }
 
 
@@ -287,178 +263,135 @@ def _sf_prefix(prefix: str, sf_dir: str) -> str:
     return f"{prefix}_{token}_{digest}"
 
 
-def _ann_ivf_state_fn(prefix: str = "benchann"):
-    built: set[str] = set()
+def _drop_tables(spark, names) -> None:
+    """Drop bench state tables and sweep their warehouse dirs."""
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix(
+        "file:"
+    )
+    for tbl in names:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        if warehouse:
+            shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
 
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
 
-        from ecom_etl_proj_spark.operators import similarity
-        from ecom_etl_proj_spark.plans.registry import tables_for
+def _head_queries(t):
+    return t["embeddings"].filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
 
-        pfx = _sf_prefix(prefix, sf_dir)
-        t = tables_for(spark, sf_dir)
-        if sf_dir not in built:
-            similarity.build_ann_state(spark, t, pfx, lloyd_iters=2)
-            built.add(sf_dir)
-        queries = t["embeddings"].filter(F.col("vec_id") < 10).select(
+
+def _semantic_split(t) -> int:
+    """First vec_id of the arriving batch (the last min(100, n/5))."""
+    total = similarity._corpus_size(t["embeddings"])
+    return total - min(100, max(1, total // 5))
+
+
+def _semantic_build(spark, t, pfx):
+    split = _semantic_split(t)
+    similarity.build_ann_state(
+        spark,
+        {"embeddings": t["embeddings"].filter(F.col("vec_id") < split)},
+        pfx,
+        n_centroids=max(16, int(math.sqrt(split))),
+        lloyd_iters=2,
+        corpus_size=split,
+    )
+
+
+def _semantic_probe(spark, t, pfx):
+    batch = t["embeddings"].filter(F.col("vec_id") >= _semantic_split(t))
+    return similarity.semantic_screen_state(
+        spark,
+        pfx,
+        batch.select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
-        )
-        return similarity.probe_ann_state(spark, pfx, queries)
-
-    return run
+        ),
+    )
 
 
-def _ann_sq8_state_fn(prefix: str = "benchsq"):
+def _dedup_docs(t, batch: bool):
+    """The documents split: every tenth doc_id is the arriving batch."""
+    part = F.pmod(F.col("doc_id"), F.lit(10)) == 9
+    return t["documents"].filter(part if batch else ~part)
+
+
+# The steady-state series: name -> (table tag, build, probe, tables the
+# build leaves for the caller to drop). The first call per sf_dir drops
+# those tables and builds the persisted state (landing in the p0
+# first-run number); every call returns the probe plan. Table prefixes
+# are "bench" + tag in the llm_prod ring and "sp" + tag in the scale
+# probe's state ring, so the probe's scaled-corpus builds cannot clobber
+# the bench's own state. build_ann_state drops its own tables.
+_STATE_SERIES = {
+    "ann_ivf_state": (
+        "ann",
+        lambda spark, t, pfx: similarity.build_ann_state(
+            spark, t, pfx, lloyd_iters=2
+        ),
+        lambda spark, t, pfx: similarity.probe_ann_state(
+            spark, pfx, _head_queries(t)
+        ),
+        (),
+    ),
+    "ann_sq8_state": (
+        "sq",
+        lambda spark, t, pfx: similarity.build_ann_state(
+            spark, t, pfx, lloyd_iters=2, sq8=True
+        ),
+        lambda spark, t, pfx: similarity.probe_ann_sq8_state(
+            spark, pfx, _head_queries(t)
+        ),
+        (),
+    ),
+    # full production build: Lloyd centroids + trained m=16 x 256
+    # codebooks (the pq_recall_floor config); 35-40 s at sf0.1 on 4 cores
+    "ann_ivfpq_state": (
+        "pq",
+        lambda spark, t, pfx: similarity.build_ann_state(
+            spark, t, pfx, lloyd_iters=2, pq_m=16, pq_n_codes=256, pq_iters=2
+        ),
+        lambda spark, t, pfx: similarity.probe_ann_pq_state(
+            spark, pfx, _head_queries(t)
+        ),
+        (),
+    ),
+    "semantic_dedup_state": ("sem", _semantic_build, _semantic_probe, ()),
+    "incremental_dedup_state": (
+        "idds",
+        lambda spark, t, pfx: dedup.build_dedup_state(
+            _dedup_docs(t, batch=False), pfx
+        ),
+        lambda spark, t, pfx: dedup.probe_dedup_state(
+            spark, _dedup_docs(t, batch=True), pfx
+        ),
+        ("fp", "bands", "sets"),
+    ),
+    "curated_pack_state": (
+        "cps",
+        lambda spark, t, pfx: textops.build_curation_state(
+            spark, t, pfx, hash_mode="xxhash64"
+        ),
+        lambda spark, t, pfx: textops.curated_pack_state(spark, pfx),
+        ("curation", "dd_fp", "dd_bands", "dd_sets"),
+    ),
+}
+
+
+def _state_fn(name: str, ring: str = "bench"):
+    """The bench callable of state series ``name``: builds its state
+    once per sf_dir under the ``ring`` table prefix, then probes."""
+    tag, build, probe, drop = _STATE_SERIES[name]
     built: set[str] = set()
 
     def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from ecom_etl_proj_spark.operators import similarity
-        from ecom_etl_proj_spark.plans.registry import tables_for
-
-        pfx = _sf_prefix(prefix, sf_dir)
+        pfx = _sf_prefix(ring + tag, sf_dir)
         t = tables_for(spark, sf_dir)
         if sf_dir not in built:
-            similarity.build_ann_state(
-                spark, t, pfx, lloyd_iters=2, sq8=True
-            )
+            _drop_tables(spark, [f"{pfx}_{d}" for d in drop])
+            build(spark, t, pfx)
             built.add(sf_dir)
-        queries = t["embeddings"].filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        )
-        return similarity.probe_ann_sq8_state(spark, pfx, queries)
-
-    return run
-
-
-def _ann_ivfpq_state_fn(prefix: str = "benchpq"):
-    built: set[str] = set()
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from ecom_etl_proj_spark.operators import similarity
-        from ecom_etl_proj_spark.plans.registry import tables_for
-
-        pfx = _sf_prefix(prefix, sf_dir)
-        t = tables_for(spark, sf_dir)
-        if sf_dir not in built:
-            # full production build: Lloyd centroids + trained
-            # m=16 x 256 codebooks (the pq_recall_floor config), via
-            # the Arrow/BLAS assignment twin — measured 6x faster than
-            # the HOF expression form at sf0.1 (7.5s vs 44.8s) with
-            # bit-identical codebooks on this corpus
-            similarity.build_ann_state(
-                spark, t, pfx, lloyd_iters=2,
-                pq_m=16, pq_n_codes=256, pq_iters=2, assign_impl="arrow",
-            )
-            built.add(sf_dir)
-        queries = t["embeddings"].filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        )
-        return similarity.probe_ann_pq_state(spark, pfx, queries)
-
-    return run
-
-
-def _semantic_dedup_state_fn(prefix: str = "benchsem"):
-    built: set[str] = set()
-
-    def run(spark, sf_dir):
-        import math
-
-        from pyspark.sql import functions as F
-
-        from ecom_etl_proj_spark.operators import similarity
-        from ecom_etl_proj_spark.plans.registry import tables_for
-
-        pfx = _sf_prefix(prefix, sf_dir)
-        t = tables_for(spark, sf_dir)
-        emb = t["embeddings"]
-        total = similarity._corpus_size(emb)
-        b = min(100, max(1, total // 5))
-        split = total - b
-        if sf_dir not in built:
-            similarity.build_ann_state(
-                spark,
-                {"embeddings": emb.filter(F.col("vec_id") < split)},
-                pfx,
-                n_centroids=max(16, int(math.sqrt(split))),
-                lloyd_iters=2,
-                corpus_size=split,
-            )
-            built.add(sf_dir)
-        batch = emb.filter(F.col("vec_id") >= split).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        )
-        return similarity.semantic_screen_state(spark, pfx, batch)
-
-    return run
-
-
-def _incremental_dedup_state_fn(prefix: str = "benchidds"):
-    built: set[str] = set()
-
-    def run(spark, sf_dir):
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        from ecom_etl_proj_spark.operators import dedup
-        from ecom_etl_proj_spark.plans.registry import tables_for
-
-        pfx = _sf_prefix(prefix, sf_dir)
-        docs = tables_for(spark, sf_dir)["documents"]
-        if sf_dir not in built:
-            warehouse = spark.conf.get(
-                "spark.sql.warehouse.dir", ""
-            ).removeprefix("file:")
-            for tbl in (f"{pfx}_fp", f"{pfx}_bands",
-                        f"{pfx}_sets"):
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                if warehouse:
-                    shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-            dedup.build_dedup_state(
-                docs.filter(F.pmod(F.col("doc_id"), F.lit(10)) != 9), pfx
-            )
-            built.add(sf_dir)
-        batch = docs.filter(F.pmod(F.col("doc_id"), F.lit(10)) == 9)
-        return dedup.probe_dedup_state(spark, batch, pfx)
-
-    return run
-
-
-def _curated_pack_state_fn(prefix: str = "benchcps"):
-    built: set[str] = set()
-
-    def run(spark, sf_dir):
-        import shutil
-
-        from ecom_etl_proj_spark.operators import textops
-        from ecom_etl_proj_spark.plans.registry import tables_for
-
-        pfx = _sf_prefix(prefix, sf_dir)
-        if sf_dir not in built:
-            warehouse = spark.conf.get(
-                "spark.sql.warehouse.dir", ""
-            ).removeprefix("file:")
-            for tbl in (f"{pfx}_curation", f"{pfx}_dd_fp",
-                        f"{pfx}_dd_bands", f"{pfx}_dd_sets"):
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                if warehouse:
-                    shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-            textops.build_curation_state(
-                spark, tables_for(spark, sf_dir), pfx,
-                hash_mode="xxhash64",
-            )
-            built.add(sf_dir)
-        return textops.curated_pack_state(spark, pfx)
+        return probe(spark, t, pfx)
 
     return run
 
@@ -514,21 +447,6 @@ def main() -> None:
     prod_names = list(_llm_prod_queries())
     loadavg = os.getloadavg()
 
-    # SERIES BREAK (r9): ann_ivf_prod / ann_ivf_arrow warm numbers
-    # through r8 were cache-assisted — lloyd_refine's per-iteration
-    # centroid caches were never released, and the CacheManager
-    # matches by logical plan, so each warm pass was served the
-    # previous pass's materialized centroids instead of re-running the
-    # two Lloyd iterations. Releasing between passes (below, after
-    # every prod pass) makes the warm series measure honest full
-    # re-refinement; expect those two keys to step up vs <=r8.
-    def release_ann_caches() -> None:
-        from ecom_etl_proj_spark.operators.similarity import (
-            release_lloyd_caches,
-        )
-
-        release_lloyd_caches()
-
     def calibrate_pass(label: str) -> dict[str, list[float]]:
         """One calibration pass: two timed runs each of two FIXED
         host-speed primitives, independent of the code under test.
@@ -569,7 +487,15 @@ def main() -> None:
     cold_times, cold_total = one_pass("cold", HEADLINE)
     llm_cold, llm_cold_total = one_pass("llm-cold", LLM_HEADLINE)
     p0, _ = one_pass("llm-prod", prod_names)
-    release_ann_caches()
+    # SERIES BREAK (r9): ann_ivf_prod warm numbers through r8 were
+    # cache-assisted — lloyd_refine's per-iteration centroid caches
+    # were never released, and the CacheManager matches by logical
+    # plan, so each warm pass was served the previous pass's
+    # materialized centroids instead of re-running the two Lloyd
+    # iterations. Releasing after every prod pass makes the warm series
+    # measure honest full re-refinement; expect that key to step up vs
+    # <=r8.
+    similarity.release_lloyd_caches()
     # first calibration sample AFTER the cold block (running it first
     # would JIT-warm the JVM and silently shift the cold series vs
     # earlier rounds' protocol)
@@ -577,11 +503,11 @@ def main() -> None:
     t1, _ = one_pass("warm1", HEADLINE)
     l1, _ = one_pass("llm-warm1", LLM_HEADLINE)
     p1, _ = one_pass("llm-prod-warm1", prod_names)
-    release_ann_caches()
+    similarity.release_lloyd_caches()
     t2, _ = one_pass("warm2", HEADLINE)
     l2, _ = one_pass("llm-warm2", LLM_HEADLINE)
     p2, _ = one_pass("llm-prod-warm2", prod_names)
-    release_ann_caches()
+    similarity.release_lloyd_caches()
     calib_mid = calibrate_pass("mid")
     g0, g0_total = one_pass("ingest", INGEST_HEADLINE)
     g1, _ = one_pass("ingest-warm1", INGEST_HEADLINE)
@@ -651,21 +577,24 @@ def main() -> None:
             # just its JIT warmup).
             prod = _llm_prod_queries()
             state_ring = {
-                "ann_ivf_state": _ann_ivf_state_fn(prefix="spann"),
-                "ann_ivfpq_state": _ann_ivfpq_state_fn(prefix="sppq"),
-                "ann_sq8_state": _ann_sq8_state_fn(prefix="spsq"),
-                "curated_pack_state": _curated_pack_state_fn(prefix="spcps"),
-                "semantic_dedup_state": _semantic_dedup_state_fn(
-                    prefix="spsem"
-                ),
+                **{
+                    n: _state_fn(n, ring="sp")
+                    for n in (
+                        "ann_ivf_state",
+                        "ann_ivfpq_state",
+                        "ann_sq8_state",
+                        "curated_pack_state",
+                        "semantic_dedup_state",
+                    )
+                },
                 "incremental_dedup": registry.queries()["incremental_dedup"],
                 # r16: the soft-index graph-serving path (registry
                 # callable — its first call per corpus builds the
                 # 'annsft' soft inverted file, untimed under this
                 # protocol; the timed call is the bounded batch probe)
                 "knn_graph_state": registry.queries()["knn_graph_state"],
-                "incremental_dedup_state": _incremental_dedup_state_fn(
-                    prefix="spidds"
+                "incremental_dedup_state": _state_fn(
+                    "incremental_dedup_state", ring="sp"
                 ),
                 # per-invocation Lloyd rebuild, timed warm — the
                 # contrast series that shows what the persisted index
@@ -675,7 +604,7 @@ def main() -> None:
                 # CacheManager would otherwise serve the untimed
                 # call's materialized centroids to the timed one).
                 "ann_ivf_prod": lambda spark, sf_dir: (
-                    release_ann_caches(),
+                    similarity.release_lloyd_caches(),
                     prod["ann_ivf_prod"](spark, sf_dir),
                 )[1],
             }

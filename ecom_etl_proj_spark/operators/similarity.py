@@ -14,14 +14,12 @@ Two paths, as a 100 TB pipeline needs:
   bucket; only same-bucket pairs are scored. The scale path: shuffle key
   is the bucket id, fan-out scales with bucket density.
 
-Vector math comes in two implementations: Catalyst higher-order
-functions (functions/vectors.py — JVM-side, exactly mirrorable in the
-DuckDB oracles, the default on every registered entry) and, for the
-production hot paths, Arrow-batched numpy matmuls
-(``_assign_cells_arrow`` / ``_cosine_sim_arrow`` — HOFs are
-CodegenFallback, i.e. interpreted, so dense linear algebra is the one
-place a vectorized Pandas-UDF path beats the built-ins by an order of
-magnitude; A/B-tested identical, opt-in via ``impl``/``assign_impl``).
+Vector math has one implementation: Catalyst higher-order functions
+(functions/vectors.py — JVM-side, exactly mirrored in the DuckDB
+oracles). The small side (queries, centroids, codebooks) reaches the
+corpus as a broadcast frame, not a driver collect, so the search and
+training builders run no Spark job at plan build
+(test_ann_plan_build_action_free).
 """
 
 from __future__ import annotations
@@ -65,17 +63,9 @@ def _hyperplanes(n: int = N_PLANES) -> list[list[float]]:
 
 def embedding_knn(
     t: dict[str, DataFrame], n_queries: int = 10, k: int = 5,
-    impl: str = "expr", query_stride: int | None = None,
+    query_stride: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for the first ``n_queries`` vectors.
-
-    ``impl='arrow'``: computes the corpus-side cosines as one
-    (batch x dim) @ (dim x queries) numpy matmul per Arrow batch
-    instead of per-(row, query) interpreted HOF folds — the same
-    vectorization (and the same eager bounded collect of the small
-    side) as ``_assign_cells_arrow``; top-k selection stays in Spark.
-    Production mode for large query batches; the default expression
-    form remains the oracle-pinned registry entry.
 
     ``query_stride`` (r16): sample queries as ``vec_id % stride == 0``
     instead of the ``vec_id < n_queries`` head — the head coincides
@@ -91,32 +81,26 @@ def embedding_knn(
         if query_stride is not None
         else F.col("vec_id") < n_queries
     )
-    if impl == "arrow":
-        q_rows = emb.filter(qpred).select("vec_id", "embedding").collect()
-        sim = _cosine_sim_arrow(emb, q_rows).filter(
-            F.col("query_id") != F.col("neighbor_id")
-        )
-    else:
-        queries = emb.filter(qpred).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            V.norm("embedding").alias("q_norm"),
-        )
-        corpus = emb.select(
-            "vec_id", "embedding", V.norm("embedding").alias("c_norm")
-        )
-        joined = corpus.crossJoin(F.broadcast(queries)).filter(
-            F.col("vec_id") != F.col("query_id")
-        )
-        sim = joined.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                V.dot("q_emb", "embedding")
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine_sim"),
-        )
+    queries = emb.filter(qpred).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        V.norm("embedding").alias("q_norm"),
+    )
+    corpus = emb.select(
+        "vec_id", "embedding", V.norm("embedding").alias("c_norm")
+    )
+    joined = corpus.crossJoin(F.broadcast(queries)).filter(
+        F.col("vec_id") != F.col("query_id")
+    )
+    sim = joined.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(
+            V.dot("q_emb", "embedding")
+            / (F.col("q_norm") * F.col("c_norm")),
+            6,
+        ).alias("cosine_sim"),
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
@@ -127,76 +111,8 @@ def embedding_knn(
     )
 
 
-def _cosine_sim_arrow(
-    corpus: DataFrame,
-    q_rows: list,
-    q_carry: tuple[tuple[str, str], ...] = (),
-    c_carry: tuple[tuple[str, str], ...] = (),
-) -> DataFrame:
-    """(query_id, *q_carry, *c_carry, neighbor_id, cosine_sim) for every
-    (corpus row, query row) pair: the exact-kNN Arrow kernel behind
-    ``embedding_knn(impl='arrow')`` and
-    ``embedding_knn_classify(impl='arrow')``.
-
-    The bounded query block (``q_rows``: collected rows with
-    ``vec_id``, ``embedding`` and the carried fields; n_queries x dim
-    floats) is closure-captured; each corpus Arrow batch emits its rows
-    from one (batch x dim) @ (dim x queries) BLAS matmul. Row volume
-    and rounding (HALF_UP at 1e-6, matching F.round) are identical to
-    the expression forms — only the per-pair dot/norm arithmetic moves
-    from interpreted HOF folds to C. ``q_carry`` / ``c_carry`` are
-    (source, output) column pairs tiled from the query rows / repeated
-    from the corpus batch alongside each cosine; both take the type of
-    the corpus column named ``source``."""
-    q_rows = sorted(q_rows, key=lambda r: r["vec_id"])
-    q_ids = [int(r["vec_id"]) for r in q_rows]
-    q_mat = [[float(x) for x in r["embedding"]] for r in q_rows]
-    q_cols = [(out, [r[src] for r in q_rows]) for src, out in q_carry]
-
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        q = np.asarray(q_mat, dtype=np.float64)
-        qn = (q / np.linalg.norm(q, axis=1)[:, None]).T  # dim x queries
-        ids = np.asarray(q_ids, dtype=np.int64)
-        q_vals = [(out, np.asarray(vals)) for out, vals in q_cols]
-        for pdf in it:
-            if not len(pdf):
-                continue
-            v = np.asarray(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-            )
-            cos = (v / np.linalg.norm(v, axis=1)[:, None]) @ qn
-            n_rows, n_q = cos.shape
-            flat = cos.ravel()
-            # Half-UP rounding (away from zero on exact .5), matching
-            # F.round's BigDecimal HALF_UP in the expression form —
-            # np.round is IEEE half-to-even, which can diverge on exact
-            # x.xxxxx5 ties. Any residual divergence is the scaled
-            # double multiply itself (last-ulp).
-            rounded = np.sign(flat) * np.floor(np.abs(flat) * 1e6 + 0.5) / 1e6
-            out = {"query_id": np.tile(ids, n_rows)}
-            out.update((o, np.tile(vals, n_rows)) for o, vals in q_vals)
-            out.update(
-                (o, np.repeat(pdf[src].to_numpy(), n_q)) for src, o in c_carry
-            )
-            out["neighbor_id"] = np.repeat(pdf["vec_id"].to_numpy(), n_q)
-            out["cosine_sim"] = rounded
-            yield pd.DataFrame(out)
-
-    types = {f.name: f.dataType.simpleString() for f in corpus.schema.fields}
-    schema = ", ".join(
-        ["query_id long"]
-        + [f"{out} {types[src]}" for src, out in (*q_carry, *c_carry)]
-        + ["neighbor_id long", "cosine_sim double"]
-    )
-    return corpus.mapInPandas(batches, schema=schema)
-
-
 def embedding_knn_classify(
     t: dict[str, DataFrame], n_queries: int = 50, k: int = 5,
-    impl: str = "expr",
 ) -> DataFrame:
     """kNN majority-vote classification over the embedding space: the
     first ``n_queries`` vectors are the held-out queries, everything
@@ -216,49 +132,30 @@ def embedding_knn_classify(
     neighbor stage for ``probe_ann_state`` — the vote stage is
     unchanged.
 
-    ``impl='arrow'`` (r17, r16 verdict item #3): the per-(corpus row,
-    query) cosine — the query's interpreted-HOF fold and the measured
-    hot stage — runs as one (batch x dim) @ (dim x queries) BLAS
-    matmul per Arrow batch — the same ``_cosine_sim_arrow`` kernel as
-    ``embedding_knn``, with the label columns carried through; the top-k
-    window and the vote stages are unchanged. Production mode
-    (A/B-tested identical on this corpus; last-ulp BLAS divergence can
-    in principle flip a near-tied neighbor, so the oracle-pinned
-    registry row keeps the expression form).
-
     Output: (query_id, predicted_label, votes, true_label, correct).
     """
     emb = t["embeddings"]
-    if impl == "arrow":
-        cols = ("vec_id", "embedding", "label")
-        sim = _cosine_sim_arrow(
-            emb.filter(F.col("vec_id") >= n_queries).select(*cols),
-            emb.filter(F.col("vec_id") < n_queries).select(*cols).collect(),
-            q_carry=(("label", "true_label"),),
-            c_carry=(("label", "n_label"),),
-        )
-    else:
-        queries = emb.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            V.norm("embedding").alias("q_norm"),
-            F.col("label").alias("true_label"),
-        )
-        corpus = emb.filter(F.col("vec_id") >= n_queries).select(
-            "vec_id", "embedding", "label",
-            V.norm("embedding").alias("c_norm"),
-        )
-        sim = corpus.crossJoin(F.broadcast(queries)).select(
-            "query_id",
-            "true_label",
-            F.col("label").alias("n_label"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                V.dot("q_emb", "embedding")
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine_sim"),
-        )
+    queries = emb.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        V.norm("embedding").alias("q_norm"),
+        F.col("label").alias("true_label"),
+    )
+    corpus = emb.filter(F.col("vec_id") >= n_queries).select(
+        "vec_id", "embedding", "label",
+        V.norm("embedding").alias("c_norm"),
+    )
+    sim = corpus.crossJoin(F.broadcast(queries)).select(
+        "query_id",
+        "true_label",
+        F.col("label").alias("n_label"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(
+            V.dot("q_emb", "embedding")
+            / (F.col("q_norm") * F.col("c_norm")),
+            6,
+        ).alias("cosine_sim"),
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
@@ -332,79 +229,6 @@ def _pq_subvectors(emb: DataFrame, m: int, d_sub: int) -> DataFrame:
     )
 
 
-def _pq_assign_arrow(
-    emb: DataFrame, cb_rows: list, m: int, d_sub: int
-) -> DataFrame:
-    """Vectorized per-subspace nearest-code assignment: one
-    (batch x d_sub) @ (d_sub x k) BLAS matmul PER SUBSPACE per Arrow
-    batch instead of per-(row, sub, code) interpreted HOF folds — the
-    PQ twin of ``_assign_cells_arrow``, and the same trade: ~100x
-    cheaper FLOPs, opt-in for the recall-bound production path only
-    (last-ulp divergence between BLAS and sequential summation can
-    flip a near-equidistant code; the hash-verified oracle entries
-    keep the expression form). ``cb_rows`` is the collected codebook
-    [(sub, code, cvec), ...] — m*k rows, KBs. Ties resolve to the
-    lowest code (rows sorted by code, argmin returns the first
-    minimum), matching the expression form's (d, code) struct-min.
-
-    Output: (vec_id, sub, code, subvec) — subvec carried so Lloyd's
-    decimal-exact groupBy(sub, code) means run unchanged.
-    """
-    by_sub: dict[int, list] = {}
-    for r in cb_rows:
-        by_sub.setdefault(int(r["sub"]), []).append(
-            (int(r["code"]), [float(x) for x in r["cvec"]])
-        )
-    cb_ser = {
-        s: sorted(entries) for s, entries in by_sub.items()
-    }
-    m_, d_ = m, d_sub
-
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        mats = {
-            s: (
-                np.asarray([c for c, _ in entries], dtype=np.int64),
-                np.asarray([v for _, v in entries], dtype=np.float64),
-            )
-            for s, entries in cb_ser.items()
-        }
-        for pdf in it:
-            if not len(pdf):
-                continue
-            v = np.asarray(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-            )
-            frames = []
-            for s in range(m_):
-                codes_s, c = mats[s]
-                vs = v[:, s * d_ : (s + 1) * d_]
-                # squared L2 via the expansion; argmin is first-min
-                d2 = (
-                    (vs * vs).sum(axis=1)[:, None]
-                    - 2.0 * (vs @ c.T)
-                    + (c * c).sum(axis=1)[None, :]
-                )
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"].to_numpy(),
-                            "sub": s,
-                            "code": codes_s[d2.argmin(axis=1)],
-                            "subvec": [list(map(float, row)) for row in vs],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    return emb.select("vec_id", "embedding").mapInPandas(
-        batches,
-        schema="vec_id long, sub int, code int, subvec array<float>",
-    )
-
-
 def pq_train_codebook(
     emb: DataFrame,
     m: int,
@@ -412,7 +236,6 @@ def pq_train_codebook(
     d_sub: int,
     iters: int,
     cache_registry: list[DataFrame] | None = None,
-    assign_impl: str = "expr",
     cache: bool = True,
 ) -> DataFrame:
     """Deterministic per-subspace Lloyd (k-means) refinement of the
@@ -441,43 +264,36 @@ def pq_train_codebook(
     cb = _pq_codebook(emb, m, k, d_sub)
     subs = _pq_subvectors(emb, m, d_sub)
     for _ in range(iters):
-        if assign_impl == "arrow":
-            # eager (per-iteration codebook collect, m*k rows) like the
-            # IVF arrow twin — production builds only
-            assigned = _pq_assign_arrow(
-                emb, cb.collect(), m, d_sub
-            ).select("sub", "code", "subvec")
-        else:
-            cb_arr = cb.groupBy("sub").agg(
-                F.collect_list(
-                    F.struct(F.col("code"), F.col("cvec"))
-                ).alias("cbs")
+        cb_arr = cb.groupBy("sub").agg(
+            F.collect_list(
+                F.struct(F.col("code"), F.col("cvec"))
+            ).alias("cbs")
+        )
+        nearest = F.array_min(
+            F.transform(
+                F.col("cbs"),
+                lambda c: F.struct(
+                    F.aggregate(
+                        F.zip_with(
+                            F.col("subvec"),
+                            c["cvec"],
+                            lambda x, y: (
+                                x.cast("double") - y.cast("double")
+                            )
+                            * (x.cast("double") - y.cast("double")),
+                        ),
+                        F.lit(0.0).cast("double"),
+                        lambda acc, v: acc + v,
+                    ).alias("dist"),
+                    c["code"].alias("code"),
+                ),
             )
-            nearest = F.array_min(
-                F.transform(
-                    F.col("cbs"),
-                    lambda c: F.struct(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("subvec"),
-                                c["cvec"],
-                                lambda x, y: (
-                                    x.cast("double") - y.cast("double")
-                                )
-                                * (x.cast("double") - y.cast("double")),
-                            ),
-                            F.lit(0.0).cast("double"),
-                            lambda acc, v: acc + v,
-                        ).alias("dist"),
-                        c["code"].alias("code"),
-                    ),
-                )
-            )["code"]
-            assigned = (
-                subs.join(F.broadcast(cb_arr), "sub")
-                .withColumn("code", nearest)
-                .select("sub", "code", "subvec")
-            )
+        )["code"]
+        assigned = (
+            subs.join(F.broadcast(cb_arr), "sub")
+            .withColumn("code", nearest)
+            .select("sub", "code", "subvec")
+        )
         # ONE narrow decimal avg keyed by (sub, code, dim) over the
         # posexploded subvectors instead of d_sub independent avg
         # expressions (r17) — the same bit-exact reshape as
@@ -530,25 +346,18 @@ def pq_train_codebook(
     return cb
 
 
-# A/B-measured default for the two bit-identical PQ encode forms
-# (tools/ab_pq_encode.py + the in-context ring A/B, r13 — the r12
-# fold rewrite shipped with no recorded timing and the ring slowed):
-# with the argmin FORCED both forms cost the same (both L2 folds are
-# interpreted HOFs; sf0.1 warm-min join/fold: 0.76/0.72 at 8x16,
-# 97/81 at 16x256 on 10x data), but IN the registered retrieval ring
-# the join form wins pq_search by ~25% (0.94 vs 1.26 warm-min; the
-# ADC consumer prunes `d`, and the join+partial-min shape survives
-# that pruning better) and ties ann_ivfpq (1.77 vs 1.73) — so small-k
-# (oracle) configs default to the r11 join form, restoring the r12
-# ring regression, and wide codebooks keep the fold (marginally
-# faster, no k-way row expansion buffered per subvector). Neither
-# expression form is the production encode: at the servable 16x256
-# config the Arrow/BLAS twin (`_pq_assign_arrow`) is 23-35x faster
-# (2.5s vs 81-97s on 20k vectors) and flat in k — production builds
-# route through it (``build_ann_state(assign_impl='arrow')``), the
-# oracle rows keep the expression form for bit-exact DuckDB parity.
-# Codes/distances are bit-identical between join and fold (same
-# zip_with L2 arithmetic, same (d asc, code asc) tie-break).
+# Codebook width at which PQ encoding switches from the join form to
+# the fold form (measured in the r13 A/B): with the argmin FORCED both
+# forms cost the same (both L2 folds are interpreted HOFs; sf0.1
+# warm-min join/fold: 0.76/0.72 at 8x16, 97/81 at 16x256 on 10x data),
+# but IN the registered retrieval ring the join form wins pq_search by
+# ~25% (0.94 vs 1.26 warm-min; the ADC consumer prunes `d`, and the
+# join+partial-min shape survives that pruning better) and ties
+# ann_ivfpq (1.77 vs 1.73) — so small-k (oracle) configs take the r11
+# join form and wide codebooks keep the fold (marginally faster, no
+# k-way row expansion buffered per subvector). Codes/distances are
+# bit-identical between join and fold (same zip_with L2 arithmetic,
+# same (d asc, code asc) tie-break).
 PQ_FOLD_MIN_CODES = 64
 
 
@@ -558,12 +367,11 @@ def _pq_codes(
     k: int,
     d_sub: int,
     cb: DataFrame | None = None,
-    encode_impl: str | None = None,
 ) -> DataFrame:
     """(vec_id, sub, code, d): per-subspace nearest-codebook
     assignment. ``cb`` overrides the seeded codebook (the trained
     production path). Two bit-identical forms, picked by codebook
-    width when ``encode_impl`` is None (see ``PQ_FOLD_MIN_CODES``):
+    width ``k`` (see ``PQ_FOLD_MIN_CODES``):
 
     - ``"join"``: broadcast join (m*k codebook rows) onto the m-way
       row-local subvector explode + struct-min groupBy; the map-side
@@ -579,21 +387,11 @@ def _pq_codes(
       codebooks. Raw per-argmin cost is the SAME as the join form
       (both L2 folds are interpreted HOFs — measured, not assumed;
       see PQ_FOLD_MIN_CODES).
-
-    For eager production builds there is a third route outside this
-    function: ``_pq_assign_arrow`` (BLAS matmul per Arrow batch,
-    23-35x faster at the servable 16x256 config and flat in k, but
-    last-ulp divergence can flip near-equidistant codes — opt-in via
-    ``assign_impl='arrow'``, never the oracle path).
-    tools/ab_pq_encode.py holds the measured A/B for all three at
-    both the oracle (8x16) and production (16x256) configs.
     """
     if cb is None:
         cb = _pq_codebook(emb, m, k, d_sub)
     subs = _pq_subvectors(emb, m, d_sub)
-    if encode_impl is None:
-        encode_impl = "fold" if k >= PQ_FOLD_MIN_CODES else "join"
-    if encode_impl == "join":
+    if k < PQ_FOLD_MIN_CODES:
         dist = F.expr(_SQ_L2.format(a="subvec", b="cvec"))
         return (
             subs.join(F.broadcast(cb), "sub")
@@ -1344,61 +1142,6 @@ def embedding_norms(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def _assign_cells_arrow(emb: DataFrame, cent: DataFrame) -> DataFrame:
-    """Vectorized nearest-centroid assignment: one (batch x dim) @
-    (dim x cells) BLAS matmul per Arrow batch instead of per-row
-    interpreted higher-order-function folds.
-
-    The expression form (``_assign_cells``) evaluates cells x dim
-    multiply-adds per row through Catalyst's INTERPRETED lambda
-    machinery (higher-order functions are CodegenFallback) — with
-    sqrt(n) centroids that is ~2M interpreted ops per vector at 1e9
-    corpus size, and it is the measured hot path of the production IVF
-    (Lloyd assignment + final assignment dominate warm time). This is
-    the case the guide's "vectorized Pandas UDF for embedding math"
-    exception exists for: numpy's C/BLAS matmul does the same FLOPs
-    ~100x cheaper, and Arrow moves each batch once.
-
-    The centroid set is BOUNDED (~sqrt(corpus) x dim — tens of MB at
-    1e9 vectors), so collecting it once on the driver and shipping it
-    inside the task closure is the same data movement the expression
-    form's broadcast does. The collect makes this builder EAGER, which
-    is why it is opt-in (``assign_impl='arrow'``): registered/oracle
-    entries keep the expression form, whose arithmetic DuckDB mirrors
-    exactly and whose build is plan-only (test_ann_plan_build_action_
-    free). Ties: centroids are sorted by cell id and argmin returns the
-    first minimum, matching the expression form's (dist, cell) struct
-    min; last-ulp float divergence between BLAS and sequential
-    summation can in principle pick a different near-equidistant cell —
-    harmless for ANN recall, which is why the production (recall-bound)
-    path uses it and the hash-verified path does not.
-    """
-    rows = cent.select("cell", "c_emb").collect()
-    rows.sort(key=lambda r: r["cell"])
-    cell_ids = [int(r["cell"]) for r in rows]
-    cent_mat = [[float(x) for x in r["c_emb"]] for r in rows]
-
-    def batches(it):
-        import numpy as np
-
-        c = np.asarray(cent_mat, dtype=np.float64)
-        mn = (c / np.linalg.norm(c, axis=1)[:, None]).T  # dim x cells
-        ids = np.asarray(cell_ids, dtype=np.int64)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            v = np.asarray(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-            )
-            out = pdf[["vec_id", "embedding"]].copy()
-            out["cell"] = ids[(-(v @ mn)).argmin(axis=1)]
-            yield out
-
-    return emb.select("vec_id", "embedding").mapInPandas(
-        batches, schema="vec_id long, embedding array<float>, cell long"
-    )
-
-
 def _cent_arr(cent: DataFrame) -> DataFrame:
     """The centroid table folded into ONE (cents: array<struct<cell,
     c_emb, c_norm>>) row — the broadcast shape `_assign_cells`'s
@@ -1504,8 +1247,8 @@ def release_lloyd_caches(registry: list[DataFrame] | None = None) -> None:
     (the same distortion the r8 curated_pack cache-leak fix corrected).
     Call this AFTER the first action on the returned plan: releasing
     earlier would reintroduce the quadratic recompute the caches exist
-    to prevent. bench.py calls it between passes so the ann_ivf_prod /
-    ann_ivf_arrow warm series measure full re-refinement.
+    to prevent. bench.py calls it between passes so the ann_ivf_prod
+    warm series measures full re-refinement.
 
     SINGLE-CONSUMER CONTRACT of the no-argument form: it pops the
     GLOBAL registry, so it releases caches from every lloyd_refine
@@ -1523,8 +1266,6 @@ def lloyd_refine(
     emb: DataFrame,
     cent: DataFrame,
     iters: int,
-    dim: int = DIM,
-    assign_impl: str = "expr",
     cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Deterministic Lloyd (k-means) refinement of an IVF centroid set.
@@ -1542,8 +1283,6 @@ def lloyd_refine(
     centroids stay reproducible run to run, asserted wide-vs-narrow in
     test_lloyd_narrow_means_match_wide. Cells that lose every member
     simply drop out (k shrinks), matching standard k-means behavior.
-    ``dim`` is retained for API stability; the posexplode form no
-    longer needs it.
 
     Centroid QUALITY is what IVF recall actually depends on at 100 TB:
     seeded centroids (first sqrt(n) vectors) make cells of uneven
@@ -1551,9 +1290,8 @@ def lloyd_refine(
     exact ``embedding_knn`` is asserted to hold-or-improve in
     tests/test_operators.py::test_ann_ivf_lloyd_recall.
     """
-    assign = _assign_cells_arrow if assign_impl == "arrow" else _assign_cells
     for _ in range(iters):
-        assigned = assign(emb, cent)
+        assigned = _assign_cells(emb, cent)
         # Means via ONE narrow decimal avg keyed by (cell, dim) over
         # the posexploded vectors instead of ``dim`` independent avg
         # expressions keyed by cell (r17, r16 verdict item #5): the
@@ -1621,7 +1359,7 @@ def lloyd_refine(
 def ann_ivf(
     t: dict[str, DataFrame], n_centroids: int | None = None, n_probe: int = 2,
     n_queries: int = 10, k: int = 5, corpus_size: int | None = None,
-    lloyd_iters: int = 2, assign_impl: str = "expr",
+    lloyd_iters: int = 2,
     cache_registry: list[DataFrame] | None = None,
     query_stride: int | None = None,
 ) -> DataFrame:
@@ -1659,12 +1397,9 @@ def ann_ivf(
     )
     if lloyd_iters:
         cent = lloyd_refine(
-            emb, cent, lloyd_iters, assign_impl=assign_impl,
-            cache_registry=cache_registry,
+            emb, cent, lloyd_iters, cache_registry=cache_registry
         )
-    assigned = (
-        _assign_cells_arrow if assign_impl == "arrow" else _assign_cells
-    )(emb, cent)
+    assigned = _assign_cells(emb, cent)
     # each query probes its n_probe nearest cells — ranked by the same
     # query-norm-free metric as cell assignment (-dot / ||c||: the query
     # norm is constant within each window partition, so the ranking is
@@ -1716,7 +1451,6 @@ def ann_ivfpq(
     lloyd_iters: int = 0,
     pq_iters: int = 0,
     cache_registry: list[DataFrame] | None = None,
-    assign_impl: str = "expr",
 ) -> DataFrame:
     """IVF-PQ: the composition that actually serves billion-scale ANN
     — IVF cell pruning (``ann_ivf``) to touch only the probed cells'
@@ -1732,19 +1466,10 @@ def ann_ivfpq(
     broadcast-argmin fold; per-query distance tables are
     n_queries*m*n_codes rounded DECIMAL entries broadcast onto the
     candidate set; ADC sums are exact, so rankings are
-    engine-deterministic (ties -> smaller neighbor_id).
-
-    ``assign_impl='arrow'`` (r17, r16 verdict item #3): the two
-    corpus-scale interpreted-HOF stages — the cell-assignment argmin
-    fold and the per-subspace PQ encode — run as Arrow-batched BLAS
-    matmuls (``_assign_cells_arrow`` / ``_pq_assign_arrow``) instead
-    of Catalyst's CodegenFallback lambda machinery; the probe,
-    distance-table and ADC stages are unchanged. Same trade as
-    ``ann_ivf``'s arrow twin: eager bounded collects (centroids +
-    codebook — KBs), last-ulp BLAS divergence can flip a
-    near-equidistant cell/code, so it is the PRODUCTION serving form
-    (recall-bound, A/B-tested identical on this corpus) and never the
-    oracle-pinned registry entry.
+    engine-deterministic (ties -> smaller neighbor_id). With
+    ``lloyd_iters``/``pq_iters`` set, the centroids and codebooks are
+    trained in-plan (``lloyd_refine`` / ``pq_train_codebook``); the
+    build stays plan-only either way.
 
     Output: (query_id, neighbor_id, adc_dist, rank).
     """
@@ -1759,28 +1484,17 @@ def ann_ivfpq(
     )
     if lloyd_iters:
         cent = lloyd_refine(
-            emb, cent, lloyd_iters, assign_impl=assign_impl,
-            cache_registry=cache_registry,
+            emb, cent, lloyd_iters, cache_registry=cache_registry
         )
-    assigned = (
-        _assign_cells_arrow if assign_impl == "arrow" else _assign_cells
-    )(emb, cent).select("vec_id", "cell")
+    assigned = _assign_cells(emb, cent).select("vec_id", "cell")
     cb = (
-        pq_train_codebook(
-            emb, m, n_codes, d_sub, pq_iters, cache_registry,
-            assign_impl=assign_impl,
-        )
+        pq_train_codebook(emb, m, n_codes, d_sub, pq_iters, cache_registry)
         if pq_iters
         else _pq_codebook(emb, m, n_codes, d_sub)
     )
-    if assign_impl == "arrow":
-        codes = _pq_assign_arrow(emb, cb.collect(), m, d_sub).select(
-            "vec_id", "sub", "code"
-        )
-    else:
-        codes = _pq_codes(emb, m, n_codes, d_sub, cb=cb).select(
-            "vec_id", "sub", "code"
-        )
+    codes = _pq_codes(emb, m, n_codes, d_sub, cb=cb).select(
+        "vec_id", "sub", "code"
+    )
 
     queries = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -1968,7 +1682,6 @@ def ivf_cell_balance(
     n_centroids: int | None = None,
     corpus_size: int | None = None,
     lloyd_iters: int = 0,
-    assign_impl: str = "expr",
     cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """IVF cell-population balance audit: one row per occupied cell
@@ -2015,12 +1728,9 @@ def ivf_cell_balance(
     )
     if lloyd_iters:
         cent = lloyd_refine(
-            emb, cent, lloyd_iters, assign_impl=assign_impl,
-            cache_registry=cache_registry,
+            emb, cent, lloyd_iters, cache_registry=cache_registry
         )
-    assigned = (
-        _assign_cells_arrow if assign_impl == "arrow" else _assign_cells
-    )(emb, cent)
+    assigned = _assign_cells(emb, cent)
     counts = assigned.groupBy("cell").agg(F.count("*").alias("n_vectors"))
     if lloyd_iters:
         surviving = counts.agg(F.count("*").alias("__n_cells"))
@@ -2047,7 +1757,6 @@ def build_ann_state(
     prefix: str,
     n_centroids: int | None = None,
     lloyd_iters: int = 2,
-    assign_impl: str = "expr",
     n_buckets: int = 32,
     corpus_size: int | None = None,
     location: str | None = None,
@@ -2174,10 +1883,7 @@ def build_ann_state(
     )
     caches: list[DataFrame] = []
     if lloyd_iters:
-        cent = lloyd_refine(
-            emb, cent, lloyd_iters, assign_impl=assign_impl,
-            cache_registry=caches,
-        )
+        cent = lloyd_refine(emb, cent, lloyd_iters, cache_registry=caches)
     # Centroids stored as double arrays regardless of mode so the
     # probe's cell-ranking arithmetic is identical whether the set is
     # seeded (float32 source) or Lloyd-refined (decimal-exact doubles).
@@ -2193,16 +1899,13 @@ def build_ann_state(
     # Assignment happens ONCE, at build — against the just-written
     # centroid table (not the in-plan Lloyd chain) so the persisted
     # inverted file is byte-consistent with the persisted centroids.
-    # The soft build multi-assigns (expr form — the gap gate is the
-    # oracle-pinned expression); home-only keeps the impl choice.
+    # The soft build multi-assigns (home cell plus near-boundary cells).
     if b_soft > 1:
         assigned = _soft_assign_cells(
             emb, spark.table(f"{prefix}_centroids"), b_soft, soft_margin
         )
     else:
-        assigned = (
-            _assign_cells_arrow if assign_impl == "arrow" else _assign_cells
-        )(emb, spark.table(f"{prefix}_centroids"))
+        assigned = _assign_cells(emb, spark.table(f"{prefix}_centroids"))
     write_bucketed(assigned, f"{prefix}_cells", "cell", n_buckets, location)
     # self-describing index: append_ann_state reads the soft config
     # from the state itself, so a soft index keeps its recall contract
@@ -2218,10 +1921,7 @@ def build_ann_state(
     if pq_m is not None:
         d_sub = DIM // pq_m
         cb = (
-            pq_train_codebook(
-                emb, pq_m, pq_n_codes, d_sub, pq_iters, caches,
-                assign_impl=assign_impl,
-            )
+            pq_train_codebook(emb, pq_m, pq_n_codes, d_sub, pq_iters, caches)
             if pq_iters
             else _pq_codebook(emb, pq_m, pq_n_codes, d_sub)
         )
@@ -2237,15 +1937,8 @@ def build_ann_state(
         # encode against the just-written codebook (byte-consistent with
         # the persisted table, same discipline as the centroid/cell pair)
         persisted_cb = spark.table(f"{prefix}_codebook")
-        raw_codes = (
-            _pq_assign_arrow(
-                emb, persisted_cb.collect(), pq_m, d_sub
-            ).select("vec_id", "sub", "code")
-            if assign_impl == "arrow"
-            else _pq_codes(emb, pq_m, pq_n_codes, d_sub, cb=persisted_cb)
-        )
         codes = (
-            raw_codes
+            _pq_codes(emb, pq_m, pq_n_codes, d_sub, cb=persisted_cb)
             .groupBy("vec_id")
             .agg(
                 F.array_sort(
@@ -2352,7 +2045,6 @@ def append_ann_state(
     spark,
     prefix: str,
     new_vectors: DataFrame,
-    assign_impl: str = "expr",
 ) -> None:
     """Fold an ingested vector batch into the persisted IVF index —
     the ANN mirror of ``append_dedup_state``. New vectors (vec_id,
@@ -2387,9 +2079,7 @@ def append_ann_state(
         mrow = spark.table(f"{prefix}_meta").collect()[0]
         b_soft = int(mrow["b_soft"])
         soft_margin = float(mrow["soft_margin"])
-    assigned = (
-        _assign_cells_arrow if assign_impl == "arrow" else _assign_cells
-    )(new_vectors, spark.table(f"{prefix}_centroids"))
+    assigned = _assign_cells(new_vectors, spark.table(f"{prefix}_centroids"))
     if b_soft > 1:
         soft_rows = _soft_assign_cells(
             new_vectors, spark.table(f"{prefix}_centroids"),
@@ -2412,15 +2102,9 @@ def append_ann_state(
         m = int(dims["mx"]) + 1
         k_eff = int(dims["k"])
         d_sub = DIM // m
-        raw_codes = (
-            _pq_assign_arrow(
-                new_vectors, cb.collect(), m, d_sub
-            ).select("vec_id", "sub", "code")
-            if assign_impl == "arrow"
-            else _pq_codes(new_vectors, m, k_eff, d_sub, cb=cb)
-        )
         codes = (
-            raw_codes.groupBy("vec_id")
+            _pq_codes(new_vectors, m, k_eff, d_sub, cb=cb)
+            .groupBy("vec_id")
             .agg(
                 F.array_sort(
                     F.collect_list(F.struct("sub", "code"))
@@ -2766,7 +2450,6 @@ def incremental_semantic_dedup(
     n_centroids: int | None = None,
     lloyd_iters: int = 0,
     corpus_size: int | None = None,
-    assign_impl: str = "expr",
     cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Semantic (embedding-space) incremental dedup: a NEW BATCH of
@@ -2817,12 +2500,9 @@ def incremental_semantic_dedup(
     )
     if lloyd_iters:
         cent = lloyd_refine(
-            corpus, cent, lloyd_iters, assign_impl=assign_impl,
-            cache_registry=cache_registry,
+            corpus, cent, lloyd_iters, cache_registry=cache_registry
         )
-    assigned = (
-        _assign_cells_arrow if assign_impl == "arrow" else _assign_cells
-    )(corpus, cent)
+    assigned = _assign_cells(corpus, cent)
     cent_n = cent.select("cell", "c_emb", V.norm("c_emb").alias("c_norm"))
     probes = _rank_probe_cells(batch, cent_n, n_probe)
     sims = assigned.join(F.broadcast(probes), "cell").select(

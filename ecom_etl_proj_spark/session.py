@@ -8,7 +8,7 @@ code lands well on a 1000-executor cluster:
 - ``spark.sql.shuffle.partitions`` defaults to a small local value but is
   env-overridable; at cluster scale AQE coalesces from a high initial
   number, so the initial value should be ~2-3x total cores there.
-- Arrow enabled for the few Pandas-UDF paths (vector ops, multimodal).
+- Arrow enabled for the Pandas-UDF paths (multimodal decode).
 
 Building the session runs no Spark job: the batch ETL and the serving
 sink start as fresh jobs, so the JVM's first-run JIT lands in the first

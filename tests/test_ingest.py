@@ -123,6 +123,23 @@ def test_validate_catalog_clean_and_detects_missing(spark, tmp_path):
     assert all(v == ["missing table"] for v in missing.values())
     assert set(missing) == set(catalog.TABLES)
 
+    # a table missing a declared column is reported, from the footer
+    # alone (no Spark job), not raised as an unresolved column
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([0, 1], pa.int32())}),
+        str(tmp_path / "region.parquet"),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("validate.missing_column", "validate_catalog")
+    got = catalog.validate_catalog(spark, str(tmp_path))
+    assert got["region"] == ["missing column r_name"]
+    assert list(
+        sc.statusTracker().getJobIdsForGroup("validate.missing_column")
+    ) == []
+
 
 def test_binary_ingest_feeds_decode_path(spark, tmp_path):
     """binaryFile source → multimodal decode, end to end: metadata

@@ -2072,33 +2072,6 @@ def test_dedup_threshold_sweep_monotone(spark, tables):
     assert cums[0] == n_pairs_low
 
 
-def test_assign_cells_arrow_matches_expr(spark, tables):
-    """The vectorized (Arrow + BLAS) assignment must agree with the
-    Catalyst-expression form cell-for-cell, and the full production
-    IVF must return identical neighbors under either implementation.
-    (At 100k vectors x 316 centroids the arrow path measured ~14x
-    faster — it is the production mode; the expression form stays on
-    the oracle-pinned registry entry.)"""
-    from ecom_etl_proj_spark.operators import similarity as sim
-
-    emb = tables["embeddings"]
-    nc = max(16, int(emb.count() ** 0.5))
-    cent = emb.filter(F.col("vec_id") < nc).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("c_emb")
-    )
-    expr = {r["vec_id"]: r["cell"] for r in sim._assign_cells(emb, cent).collect()}
-    arrow = {
-        r["vec_id"]: r["cell"]
-        for r in sim._assign_cells_arrow(emb, cent).collect()
-    }
-    assert expr == arrow
-    got_e = sorted(map(tuple, sim.ann_ivf(tables, lloyd_iters=2).collect()))
-    got_a = sorted(
-        map(tuple, sim.ann_ivf(tables, lloyd_iters=2, assign_impl="arrow").collect())
-    )
-    assert got_e == got_a
-
-
 def test_lloyd_narrow_means_match_wide(spark, tables):
     """r17 reshaped both Lloyd mean aggregations (lloyd_refine /
     pq_train_codebook) from dim-wide independent decimal avgs keyed by
@@ -2197,66 +2170,6 @@ def test_lloyd_cache_release_hook(spark, tables):
     after_ids = {i.id() for i in jsc_sc.getRDDStorageInfo()}
     assert not (new_ids & after_ids)  # and release dropped all of them
     assert similarity._lloyd_caches == []
-
-
-def test_embedding_knn_arrow_matches_expr(spark, tables):
-    """The vectorized brute-force kNN must return exactly the
-    expression form's neighbors, similarities, and ranks."""
-    from ecom_etl_proj_spark.operators import similarity as sim
-
-    a = sorted(map(tuple, sim.embedding_knn(tables).collect()))
-    b = sorted(map(tuple, sim.embedding_knn(tables, impl="arrow").collect()))
-    assert a == b and len(a) > 0
-
-
-def test_ann_ivfpq_arrow_matches_expr(spark, tables):
-    """The r17 arrow twin (BLAS cell assignment + BLAS PQ encode) must
-    return exactly the expression form's IVF-PQ rankings — seeded
-    config (the retrieval-ring comparison point) and production config
-    (lloyd_iters/pq_iters) both."""
-    from ecom_etl_proj_spark.operators import similarity as sim
-
-    a = sorted(map(tuple, sim.ann_ivfpq(tables).collect()))
-    b = sorted(
-        map(tuple, sim.ann_ivfpq(tables, assign_impl="arrow").collect())
-    )
-    assert a == b and len(a) > 0
-    reg: list = []
-    p_e = sorted(
-        map(
-            tuple,
-            sim.ann_ivfpq(
-                tables, lloyd_iters=2, pq_iters=1, cache_registry=reg
-            ).collect(),
-        )
-    )
-    sim.release_lloyd_caches(reg)
-    p_a = sorted(
-        map(
-            tuple,
-            sim.ann_ivfpq(
-                tables, lloyd_iters=2, pq_iters=1, assign_impl="arrow",
-                cache_registry=reg,
-            ).collect(),
-        )
-    )
-    sim.release_lloyd_caches(reg)
-    assert p_e == p_a and len(p_e) > 0
-
-
-def test_embedding_knn_classify_arrow_matches_expr(spark, tables):
-    """The r17 arrow twin of the kNN label vote must return exactly
-    the expression form's predictions, votes, and correctness flags."""
-    from ecom_etl_proj_spark.operators import similarity as sim
-
-    a = sorted(map(tuple, sim.embedding_knn_classify(tables).collect()))
-    b = sorted(
-        map(
-            tuple,
-            sim.embedding_knn_classify(tables, impl="arrow").collect(),
-        )
-    )
-    assert a == b and len(a) > 0
 
 
 def test_covisitation_pairs_hand_sessions(spark):
@@ -3413,21 +3326,16 @@ def test_pq_train_codebook_reduces_error(spark, tables):
 
     seeded, trained = total_err(0), total_err(2)
     assert trained <= seeded
-    # determinism: decimal-exact means -> identical codebook both runs;
-    # and the Arrow/BLAS assignment twin trains the same codebook
-    # (struct-min vs sorted-first-min tie-breaks agree; last-ulp BLAS
-    # divergence would need a near-equidistant pair, absent here)
+    # determinism: decimal-exact means -> identical codebook both runs
     emb = tables["embeddings"]
     runs = []
-    for impl in ("expr", "expr", "arrow"):
-        cb = similarity.pq_train_codebook(
-            emb, 8, 16, 8, iters=2, assign_impl=impl
-        )
+    for _ in range(2):
+        cb = similarity.pq_train_codebook(emb, 8, 16, 8, iters=2)
         runs.append(sorted(
             (r["sub"], r["code"], tuple(r["cvec"])) for r in cb.collect()
         ))
         similarity.release_lloyd_caches()
-    assert runs[0] == runs[1] == runs[2]
+    assert runs[0] == runs[1]
 
 
 def test_pq_refine_reranks_shortlist_exactly(spark):

@@ -226,18 +226,37 @@ def test_ivf_bounded_by_cells(tables):
 
 
 def test_ann_plan_build_action_free(spark, tables):
-    """Building the ann_lsh / ann_ivf plans must launch NO Spark job
-    when a corpus-size hint is given, and at most one (memoized on the
-    table handle) without a hint."""
+    """Building the vector search and training plans must launch NO
+    Spark job when a corpus-size hint is given — Lloyd-trained
+    centroids and codebooks included, whose small side reaches the
+    corpus as a broadcast frame, never a driver collect — and the
+    ann_lsh / ann_ivf builds at most one (memoized on the table
+    handle) without a hint."""
     from ecom_etl_proj_spark.operators import similarity as sim
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
+    reg: list = []
     sc.setJobGroup("ann_build_hint", "plan build with hint")
     sim.ann_lsh(tables, corpus_size=1000)
     sim.ann_ivf(tables, corpus_size=1000)
-    assert list(tracker.getJobIdsForGroup("ann_build_hint")) == []
+    sim.embedding_knn(tables)
+    sim.embedding_knn_classify(tables)
+    sim.ann_ivf(
+        tables, corpus_size=1000, lloyd_iters=2, cache_registry=reg
+    )
+    sim.ann_ivfpq(
+        tables, corpus_size=1000, lloyd_iters=2, pq_iters=1,
+        cache_registry=reg,
+    )
+    sim.ivf_cell_balance(tables, corpus_size=1000)
+    sim.pq_train_codebook(
+        tables["embeddings"], 8, 16, 8, iters=2, cache_registry=reg
+    )
+    jobs = list(tracker.getJobIdsForGroup("ann_build_hint"))
+    sim.release_lloyd_caches(reg)
+    assert jobs == []
 
     # unhinted: first build may count once, second build must be free
     sim.ann_lsh(tables)
